@@ -85,7 +85,7 @@ def q_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("key"),
         synth.cell_from_key(F.col("o_orderkey"), 12).alias("cell"),
     )
-    return jx.contains_indexed(probes, region).select("key", "contained")
+    return jx.contains(probes, region).select("key", "contained")
 
 
 def q_get_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -102,7 +102,7 @@ def q_get_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("key"),
         synth.cell_from_key(F.col("o_orderkey"), 12).alias("cell"),
     )
-    return jx.get_indexed(probes, region).select("key", "stored_cell", "supp")
+    return jx.get_chained(probes, region).select("key", "stored_cell", "supp")
 
 
 def q_region_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,7 +116,7 @@ def q_region_unique_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = synth_pages(spark, sf_dir, copies=COPIES, res=PAGE_RES, with_html=False)
     regions = ops.region_map(spark)
     slim = pages.select("cell", tx.fingerprint(F.col("text")).alias("fp"))
-    assigned = jx.get_auto(slim, regions, probe_col="cell")
+    assigned = jx.get_chained(slim, regions, probe_col="cell")
     return assigned.groupBy("region").agg(
         F.count_distinct("fp").alias("n_unique_docs"),
         F.count("*").alias("n_pages"),
@@ -1165,7 +1165,7 @@ def q_ann_in_region(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = synth_pages(spark, sf_dir, copies=COPIES, res=PAGE_RES, with_html=False)
     regions = ops.region_map(spark)
-    assigned = jx.get_auto(
+    assigned = jx.get_chained(
         pages.select("page_key", "cell"), regions, probe_col="cell"
     ).filter(F.col("region") == ANN_REGION)
     # page_key = doc_id * COPIES + copy → integer DIV (exact, no

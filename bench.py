@@ -128,16 +128,6 @@ def run(spark) -> tuple[dict, dict]:
     extras["pages_per_sec"] = round(n_pages / timings["q1_region_assign"], 1)
     extras["region_counts"] = {r["region"]: r["n_pages"] for r in counts}
 
-    # q2: alternate physical forms, for comparison with q1's auto(chained)
-    timed(
-        "q2_region_assign_explode",
-        lambda: ops.region_counts(pages, regions, form="explode").collect(),
-    )
-    timed(
-        "q2b_region_assign_indexed",
-        lambda: ops.region_counts(pages, regions, form="indexed").collect(),
-    )
-
     # q3: tile rollup at res 6
     timed("q3_tile_rollup", lambda: ops.tile_region_rollup(pages, regions, 6).collect())
 

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from hexspark import ops  # noqa: E402
 from hexspark import build as bx  # noqa: E402
 from hexspark import cells as cx  # noqa: E402
-from hexspark import join as jx  # noqa: E402
 from hexspark import synth  # noqa: E402
 from hexspark.session import get_spark  # noqa: E402
 
@@ -70,10 +69,6 @@ def build_queries(spark):
     Q = {}
 
     Q["q1_region_assign"] = (lambda: ops.region_counts(pages, regions), "collect")
-    Q["q2_region_assign_explode"] = (
-        lambda: ops.region_counts(pages, regions, form="explode"), "collect")
-    Q["q2b_region_assign_indexed"] = (
-        lambda: ops.region_counts(pages, regions, form="indexed"), "collect")
     Q["q3_tile_rollup"] = (
         lambda: ops.tile_region_rollup(pages, regions, 6), "collect")
 

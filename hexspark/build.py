@@ -476,10 +476,10 @@ def upsert(
     if mode == "and_modify":
         if modify_fn is None:
             raise ValueError("and_modify requires modify_fn(cell, value) -> Column")
-        probed = jx.probe_indexed(
-            updates.select(cell_col, value_col), region, probe_col=cell_col,
-            region_col=cell_col, stored_col="__hit",
-        )
+        probed = jx.get_chained(
+            updates.select(cell_col, value_col), region.select(cell_col),
+            probe_col=cell_col, region_col=cell_col, how="left",
+        ).withColumnRenamed("stored_cell", "__hit")
         vacant = probed.filter(F.col("__hit").isNull()).drop("__hit")
         touched = (
             probed.filter(F.col("__hit").isNotNull())
@@ -503,10 +503,10 @@ def upsert(
         merged = modified.unionByName(vacant) if insert_vacant else modified
     elif mode == "or_insert":
         # drop updates already covered by (ancestor-or-self) leaves
-        probed = jx.probe_indexed(
-            updates.select(cell_col, value_col), region, probe_col=cell_col,
-            region_col=cell_col, stored_col="__hit",
-        )
+        probed = jx.get_chained(
+            updates.select(cell_col, value_col), region.select(cell_col),
+            probe_col=cell_col, region_col=cell_col, how="left",
+        ).withColumnRenamed("stored_cell", "__hit")
         fresh = probed.filter(F.col("__hit").isNull()).drop("__hit")
         merged = region.select(cell_col, value_col).unionByName(fresh)
     elif mode == "overwrite":

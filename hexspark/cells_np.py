@@ -83,14 +83,15 @@ def make_cell(base, r, digits) -> np.ndarray:
 class SortedCellIndex:
     """A compacted cell set/map flattened into sorted numpy arrays.
 
-    This is the broadcast-side data structure for the production
-    containment join: compacted leaves are pairwise non-related, so
-    their (lo, hi) ranges are disjoint and sorted by ``lo``; a probe's
-    covering leaf — if any — is the unique candidate at
+    The numpy reference that tests and the benchmark check the
+    containment join (:func:`hexspark.join.get_chained`) against:
+    compacted leaves are pairwise non-related, so their (lo, hi) ranges
+    are disjoint and sorted by ``lo``; a probe's covering leaf — if any
+    — is the unique candidate at
     ``searchsorted(lo, lo15(probe), 'right') - 1``.  This replaces the
     reference's pointer-tree descent
-    (/root/reference/src/node.rs:83-111) with one binary search per
-    probe, vectorized across each Arrow batch.
+    (/root/reference/src/node.rs:83-111) with one vectorized binary
+    search per probe.
     """
 
     __slots__ = ("cells", "los", "his", "order")

@@ -771,7 +771,7 @@ def knn_rings(
     (hexspark.topk) — no global per-probe window sort.
 
     The disk relation is probes × (2R+1)² rows, so its physical form is
-    chosen by size (mirrors ``join.get_auto``'s measured-form-chooser):
+    chosen by size:
 
     * small (≤ ``broadcast_rows``): ONE pass — broadcast the full-radius
       disk relation; the stored side (the big table) never shuffles.

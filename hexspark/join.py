@@ -14,48 +14,20 @@ against a broadcast compacted region table.  Semantics preserved exactly:
   (/root/reference/src/hex_tree_map.rs:244-261,
   /root/reference/src/disktree/mod.rs:226-230).
 
-Two physical forms:
-
-1. ``*_explode`` — pure-DataFrame rewrite: explode each probe into its
-   ≤16 ancestors and broadcast equi-join on the stored cell.  Fully
-   declarative (Catalyst plans a BroadcastHashJoin), used as the
-   SQL-expressible oracle form.  Costs a ≤16× transient row blowup.
-2. ``*_indexed`` — production form: ``mapInArrow`` over the probe
-   table with a broadcast :class:`hexspark.cells_np.SortedCellIndex`;
-   one vectorized ``searchsorted`` per raw Arrow RecordBatch (a
-   ``mapInPandas`` twin is kept for comparison — the pandas
-   materialization costs ~20%).  No row blowup, no shuffle, O(log n)
-   per probe — the direct analogue of the reference's O(res) descent,
-   but batched.  Values of arbitrary Spark
-   type are attached afterwards by a *tiny* broadcast join on the
-   stored cell key, so the hot path stays numeric.
+One physical form: :func:`get_chained`, one plain broadcast hash join
+per resolution present in the region table, results coalesced.  The
+probe side stays in whole-stage codegen end to end — no row blowup, no
+Python boundary, no shuffle — for shallow and deep (US915, 8 levels)
+region maps alike.  :func:`contains` is the same join flagged by a
+non-NULL ``stored_cell``.
 """
 
 from __future__ import annotations
 
-from typing import Optional
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField
 
 from . import cells as cx
-from . import cells_np as cnp
-from . import constants as K
-
-
-# ---------------------------------------------------------------------------
-# ancestor-explode form (declarative / oracle)
-# ---------------------------------------------------------------------------
-
-def ancestors_array(cell_col: str, res_list: Optional[list[int]] = None) -> F.Column:
-    """Array of ``to_parent(cell, r)`` for r in ``res_list`` (default all
-    0..15).  Passing the region table's actual resolution set shrinks
-    the explode factor from 16× to typically 3-4×."""
-    rs = range(K.MAX_RES + 1) if res_list is None else sorted(res_list)
-    return F.array_compact(F.array(*[cx.to_parent(cell_col, r) for r in rs]))
 
 
 _RES_SET_MEMO: dict[tuple, list[int]] = {}
@@ -113,117 +85,26 @@ def region_res_set(region: DataFrame, region_col: str = "cell") -> list[int]:
     return rs
 
 
-def contains_explode(
-    probes: DataFrame,
-    region: DataFrame,
-    probe_col: str = "cell",
-    region_col: str = "cell",
-    out_col: str = "contained",
-    res_list: Optional[list[int]] = None,
-) -> DataFrame:
-    """Mark each probe row contained/not via explode + broadcast
-    semi-join.  Explodes only at the region's actual resolutions
-    (derived via ``region_res_set`` unless passed) — a 3-4× transient
-    row factor instead of the full 16."""
-    rs = res_list if res_list is not None else region_res_set(region, region_col)
-    if not rs:  # empty region: nothing is contained
-        return probes.withColumn(out_col, F.lit(False))
-    anc = probes.select(
-        F.col(probe_col).alias("__q"),
-        F.explode(ancestors_array(probe_col, rs)).alias("__a"),
-    )
-    hits = (
-        anc.join(
-            F.broadcast(region.select(F.col(region_col).alias("__a"))),
-            on="__a",
-            how="leftsemi",
-        )
-        .select(F.col("__q"))
-        .distinct()
-        .withColumn(out_col, F.lit(True))
-    )
-    return (
-        probes.join(hits, probes[probe_col] == hits["__q"], "left")
-        .drop("__q")
-        .withColumn(out_col, F.coalesce(F.col(out_col), F.lit(False)))
-    )
-
-
-def get_explode(
-    probes: DataFrame,
-    region: DataFrame,
-    probe_col: str = "cell",
-    region_col: str = "cell",
-    how: str = "inner",
-    res_list: Optional[list[int]] = None,
-) -> DataFrame:
-    """Nearest-ancestor value lookup via explode + broadcast hash join —
-    fully JVM-side (whole-stage codegen end to end).
-
-    Output: probe columns + ``stored_cell`` + the region's value
-    columns.  Compacted leaves are pairwise non-related, so at most one
-    ancestor matches — no dedupe needed (asserted by tests).  The
-    ancestor rows are generated with ``stack`` over pre-projected
-    ``to_parent`` columns, NOT ``explode(array(...))``: the array form
-    allocates a fresh array per probe row, which churns the allocator
-    and stops scaling past ~8 cores (measured 5.3 s vs 0.8 s at 20M
-    probes / 32 cores for the two generators).  ``res_list`` defaults
-    to the region's ACTUAL resolution set (memoized driver fetch, same
-    as ``get_auto``) — ancestors at resolutions the region does not
-    store can never match, so the output is identical and the row
-    blowup drops from 16x to the compaction depth (typically 3-4x).
-
-    Only ``how='inner'`` is supported — a left lookup over an exploded
-    probe would need a probe-wide re-collapse shuffle; use
-    :func:`get_indexed` (naturally left) when unmatched rows matter.
-    """
-    if how != "inner":
-        raise NotImplementedError("explode form is inner-only; use get_indexed")
-    rs = res_list if res_list is not None else region_res_set(region, region_col)
-    if not rs:
-        rs = [0]  # empty region: the join below matches nothing anyway
-    region_cols = [c for c in region.columns if c != region_col]
-    r = region.select(
-        F.col(region_col).alias("__a"),
-        F.col(region_col).alias("stored_cell"),
-        *region_cols,
-    )
-    probe_cols = probes.columns
-    anc = probes.select(
-        "*",
-        *[
-            cx.to_parent(probe_col, rr).alias(f"__anc{i}")
-            for i, rr in enumerate(sorted(rs))
-        ],
-    ).select(
-        *probe_cols,
-        F.expr(
-            "stack({n}, {cols}) as __a".format(
-                n=len(rs), cols=", ".join(f"__anc{i}" for i in range(len(rs)))
-            )
-        ),
-    )
-    return anc.join(F.broadcast(r), on="__a", how="inner").drop("__a")
-
-
 def get_chained(
     probes: DataFrame,
     region: DataFrame,
     probe_col: str = "cell",
     region_col: str = "cell",
     how: str = "inner",
-    res_list: Optional[list[int]] = None,
 ) -> DataFrame:
-    """Nearest-ancestor lookup as a chain of plain broadcast hash joins —
-    one per resolution present in the region table, results coalesced.
+    """Nearest-ancestor lookup (``get``) as a chain of plain broadcast
+    hash joins — one per resolution present in the region table,
+    results coalesced.
 
-    No row blowup, no per-row array allocation (explode+array churns
-    the allocator and stops scaling past ~8 cores), naturally supports
-    left joins.  Compacted leaves are pairwise non-related so at most
-    one of the chained joins matches any probe."""
+    Output: probe columns + ``stored_cell`` + the region's value
+    columns (a value column named like a probe column replaces it —
+    project the region first when that matters).  Compacted leaves are
+    pairwise non-related, so at most one of the chained joins matches
+    any probe.  NULL and invalid probe cells never match: promotion
+    keeps the mode/reserved/base bits, and stored leaves are valid."""
     if how not in ("inner", "left"):
         raise ValueError(f"get_chained: how must be 'inner' or 'left', got {how!r}")
-    rs = res_list if res_list is not None else region_res_set(region, region_col)
+    rs = region_res_set(region, region_col)
     region_cols = [c for c in region.columns if c != region_col]
     out = probes
     for i, r in enumerate(rs):
@@ -254,155 +135,18 @@ def get_chained(
     return out
 
 
-def get_auto(
-    probes: DataFrame,
-    region: DataFrame,
-    probe_col: str = "cell",
-    region_col: str = "cell",
-    how: str = "inner",
-    max_explode: int = 6,
-) -> DataFrame:
-    """Physical-form chooser for the nearest-ancestor lookup.
-
-    Measured on 100M probes (local[8] / local[32]): chained broadcast
-    joins 4.0s/2.5s, explode+join 23.1s/9.2s (per-row array allocation
-    churns the allocator and caps multi-core scaling), mapInPandas
-    searchsorted ~25s pandas-form, ~20% faster as mapInArrow (Python-side ceiling).  So: chained joins when
-    the region's resolution set is small (the common case — compacted
-    continent regions span 3-5 levels); searchsorted for deep res sets
-    where 16 chained joins would bloat the plan."""
-    rs = region_res_set(region, region_col)
-    if 0 < len(rs) <= max_explode:
-        return get_chained(probes, region, probe_col, region_col, how, rs)
-    return get_indexed(probes, region, probe_col, region_col, how)
-
-
-# ---------------------------------------------------------------------------
-# indexed form (production)
-# ---------------------------------------------------------------------------
-
-def _probe_kernel(qi: "np.ndarray", los, his, cells_sorted):
-    """Vectorized nearest-ancestor search: (covered mask, stored cells)."""
-    if len(los) == 0:  # empty region: nothing is covered
-        return np.zeros(len(qi), dtype=bool), np.zeros(len(qi), dtype=np.int64)
-    valid = cnp.is_valid(qi)
-    plo = cnp.lo(qi)
-    phi = cnp.hi(qi)
-    idx = np.searchsorted(los, plo, side="right") - 1
-    safe = np.maximum(idx, 0)
-    covered = valid & (idx >= 0) & (los[safe] <= plo) & (his[safe] >= phi)
-    stored = np.where(covered, cells_sorted[safe], 0)
-    return covered, stored
-
-
-def probe_indexed(
-    probes: DataFrame,
-    region: DataFrame,
-    probe_col: str = "cell",
-    region_col: str = "cell",
-    stored_col: str = "stored_cell",
-    form: str = "arrow",
-) -> DataFrame:
-    """Attach ``stored_cell`` (nullable) to every probe row via a
-    broadcast sorted-array binary search inside an Arrow-batched UDF.
-
-    The region's compacted cells are collected once (broadcast-scale by
-    construction — see :mod:`hexspark.build`), sorted by ``lo``, and
-    shipped to executors as numpy arrays.  NULL probe cells and probes
-    with no covering leaf get NULL ``stored_cell``.
-
-    ``form='arrow'`` (default) runs the kernel over raw
-    ``pyarrow.RecordBatch`` es (``mapInArrow``) — no pandas DataFrame
-    materialization per batch; ``form='pandas'`` is the ``mapInPandas``
-    twin (kept for comparison/regression)."""
-    cells = np.array(
-        [r[0] for r in region.select(region_col).collect()], dtype=np.int64
-    )
-    index = cnp.SortedCellIndex(cells)
-    sc = probes.sparkSession.sparkContext
-    bidx = sc.broadcast({"cells": index.cells, "los": index.los, "his": index.his})
-
-    # NULL probes become a (guaranteed-invalid) -1 sentinel so every Arrow
-    # batch arrives as plain int64 — nullable longs would otherwise decay
-    # to float64 and corrupt >2^53 cell values.
-    qcol = "__qcell"
-    src = probes.withColumn(qcol, F.coalesce(F.col(probe_col), F.lit(-1).cast("long")))
-    # note: StructType.add mutates in place — never call it on a cached
-    # df.schema; build a fresh StructType instead
-    from pyspark.sql.types import StructType
-
-    schema = StructType(
-        list(probes.schema.fields) + [StructField(stored_col, LongType(), True)]
-    )
-
-    if form == "arrow":
-        import pyarrow as pa
-
-        out_names = [f.name for f in probes.schema.fields] + [stored_col]
-        n_keep = len(probes.schema.fields)  # qcol is appended last
-
-        def afn(batches):
-            d = bidx.value
-            los, his, cells_sorted = d["los"], d["his"], d["cells"]
-            for batch in batches:
-                qi = batch.column(n_keep).to_numpy(zero_copy_only=False)
-                qi = np.ascontiguousarray(qi, dtype=np.int64)
-                covered, stored = _probe_kernel(qi, los, his, cells_sorted)
-                stored_arr = pa.array(stored, type=pa.int64(), mask=~covered)
-                cols = [batch.column(i) for i in range(n_keep)] + [stored_arr]
-                yield pa.RecordBatch.from_arrays(cols, names=out_names)
-
-        return src.mapInArrow(afn, schema=schema)
-
-    def fn(batches):
-        d = bidx.value
-        los, his, cells_sorted = d["los"], d["his"], d["cells"]
-        for pdf in batches:
-            qi = pdf[qcol].to_numpy(dtype=np.int64)
-            covered, stored = _probe_kernel(qi, los, his, cells_sorted)
-            out = pdf.drop(columns=[qcol])
-            out[stored_col] = pd.array(stored, dtype="Int64")
-            out.loc[~covered, stored_col] = pd.NA
-            yield out
-
-    return src.mapInPandas(fn, schema=schema)
-
-
-def contains_indexed(
+def contains(
     probes: DataFrame,
     region: DataFrame,
     probe_col: str = "cell",
     region_col: str = "cell",
     out_col: str = "contained",
 ) -> DataFrame:
-    out = probe_indexed(probes, region, probe_col, region_col, "__stored")
-    return out.withColumn(out_col, F.col("__stored").isNotNull()).drop("__stored")
-
-
-def get_indexed(
-    probes: DataFrame,
-    region: DataFrame,
-    probe_col: str = "cell",
-    region_col: str = "cell",
-    how: str = "inner",
-) -> DataFrame:
-    """Nearest-ancestor lookup, production form.
-
-    Heavy path is the vectorized search; the (possibly wide /
-    arbitrary-typed) region values are attached by a broadcast hash
-    join on the long ``stored_cell`` key — Catalyst broadcasts the tiny
-    side, the 10^12-row probe side never shuffles.
-    """
-    probed = probe_indexed(probes, region, probe_col, region_col, "stored_cell")
-    if how == "inner":
-        probed = probed.filter(F.col("stored_cell").isNotNull())
-    region_vals = region.withColumnRenamed(region_col, "__rc")
-    joined = probed.join(
-        F.broadcast(region_vals),
-        probed["stored_cell"] == region_vals["__rc"],
-        how="inner" if how == "inner" else "left",
-    ).drop("__rc")
-    return joined
+    """Mark each probe row contained or not: a left :func:`get_chained`
+    against the region's key column alone, flagged by a non-NULL
+    ``stored_cell``."""
+    out = get_chained(probes, region.select(region_col), probe_col, region_col, how="left")
+    return out.withColumn(out_col, F.col("stored_cell").isNotNull()).drop("stored_cell")
 
 
 # ---------------------------------------------------------------------------
@@ -424,44 +168,47 @@ def descendants(
     )
 
 
+def _descendants_range(
+    region: DataFrame,
+    probes: DataFrame,
+    region_col: str,
+    probe_col: str,
+) -> DataFrame:
+    """``descendants_join`` as a broadcast nested-loop join on
+    subtree-range overlap — O(|region| × |probes|) predicate
+    evaluations.  Serves the empty-probe case and is the reference
+    the chained form is tested against."""
+    p = F.broadcast(
+        probes.select(
+            F.col(probe_col),
+            cx.lo(probe_col).alias("__plo"),
+            cx.hi(probe_col).alias("__phi"),
+        )
+    )
+    r = region.withColumn("__rlo", cx.lo(region_col)).withColumn(
+        "__rhi", cx.hi(region_col)
+    )
+    cond = (F.col("__rlo") <= F.col("__phi")) & (F.col("__rhi") >= F.col("__plo"))
+    return r.join(p, cond, "inner").drop("__plo", "__phi", "__rlo", "__rhi")
+
+
 def descendants_join(
     region: DataFrame,
     probes: DataFrame,
     region_col: str = "cell",
     probe_col: str = "probe",
-    form: str = "chained",
 ) -> DataFrame:
     """Set-oriented ``descendants``: one output row per (probe, leaf).
 
     Output carries both keys so callers can aggregate per probe
-    (subtree-sum etc.).  Two physical forms, identical semantics:
-
-    * ``chained`` (default): ``related(leaf, probe)`` decomposed by
-      resolution into plain **equi-joins** — for each probe res ``p``,
-      leaves at-or-below ``p`` match on ``to_parent(leaf, p) ==
-      probe``, and the covering-leaf case (leaf coarser than probe)
-      matches on ``leaf == to_parent(probe, r)`` per coarser region
-      res ``r``.  Every branch is a BroadcastHashJoin: O(|region|)
-      hash lookups total, independent of probe count.
-    * ``range``: broadcast nested-loop join on subtree-range overlap —
-      O(|region| × |probes|) predicate evaluations; kept for arbitrary
-      range probes and as the declarative/oracle-shaped twin.
+    (subtree-sum etc.).  ``related(leaf, probe)`` is decomposed by
+    resolution into plain **equi-joins** — for each probe res ``p``,
+    leaves at-or-below ``p`` match on ``to_parent(leaf, p) == probe``,
+    and the covering-leaf case (leaf coarser than probe) matches on
+    ``leaf == to_parent(probe, r)`` per coarser region res ``r``.
+    Every branch is a BroadcastHashJoin: O(|region|) hash lookups
+    total, independent of probe count.
     """
-    if form == "range":
-        p = F.broadcast(
-            probes.select(
-                F.col(probe_col),
-                cx.lo(probe_col).alias("__plo"),
-                cx.hi(probe_col).alias("__phi"),
-            )
-        )
-        r = region.withColumn("__rlo", cx.lo(region_col)).withColumn(
-            "__rhi", cx.hi(region_col)
-        )
-        cond = (F.col("__rlo") <= F.col("__phi")) & (F.col("__rhi") >= F.col("__plo"))
-        return r.join(p, cond, "inner").drop("__plo", "__phi", "__rlo", "__rhi")
-    if form != "chained":
-        raise ValueError(f"unknown form {form!r}")
     p_res = region_res_set(probes, probe_col)
     r_res = region_res_set(region, region_col)
     out = None
@@ -490,7 +237,7 @@ def descendants_join(
         for b in branches:
             out = b if out is None else out.unionByName(b)
     if out is None:  # empty probe table
-        return descendants_join(region, probes, region_col, probe_col, form="range")
+        return _descendants_range(region, probes, region_col, probe_col)
     return out
 
 

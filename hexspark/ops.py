@@ -53,32 +53,16 @@ def assign_regions(
     pages: DataFrame,
     regions: DataFrame,
     how: str = "inner",
-    form: str = "auto",
 ) -> DataFrame:
     """Attach (stored_cell, region) to each page by nearest-ancestor
-    containment — the flagship spatial join.  ``form``: 'auto' picks
-    codegen explode vs searchsorted by region res-set (see
-    join.get_auto); 'indexed'/'explode' force a path."""
-    fn = {
-        "auto": jx.get_auto,
-        "chained": jx.get_chained,
-        "indexed": jx.get_indexed,
-        "explode": jx.get_explode,
-    }[form]
-    return fn(pages, regions, probe_col="cell", region_col="cell", how=how)
+    containment — the flagship spatial join (:func:`join.get_chained`:
+    one broadcast hash join per region resolution, all JVM-side)."""
+    return jx.get_chained(pages, regions, probe_col="cell", region_col="cell", how=how)
 
 
-def region_counts(
-    pages: DataFrame, regions: DataFrame, form: str = "auto"
-) -> DataFrame:
-    """Pages per region — the headline throughput query.
-
-    Pages are projected to (cell, lang) *before* the join: Catalyst
-    cannot prune columns through ``mapInPandas`` (the UDF signature
-    pins the schema), so we prune manually — at 10^12 rows this keeps
-    url/html/text bytes out of the Arrow channel entirely."""
-    slim = pages.select("cell", "lang")
-    assigned = assign_regions(slim, regions, how="inner", form=form)
+def region_counts(pages: DataFrame, regions: DataFrame) -> DataFrame:
+    """Pages per region — the headline throughput query."""
+    assigned = assign_regions(pages, regions, how="inner")
     return assigned.groupBy("region").agg(
         F.count("*").alias("n_pages"),
         F.count_distinct("lang").alias("n_langs"),
@@ -127,7 +111,7 @@ def tile_region_rollup(
     the *tile* cell).  Tiles straddling no region drop out (inner)."""
     tiles = tile_stats(pages, tile_res)
     return (
-        jx.get_auto(tiles, regions, probe_col="tile")
+        jx.get_chained(tiles, regions, probe_col="tile")
         .groupBy("region")
         .agg(
             F.count("*").alias("n_tiles"),
@@ -151,7 +135,7 @@ def top_domains_per_region(
     from .topk import topk_per_key
 
     slim = pages.select("cell", domain_of(F.col("url")).alias("domain"))
-    assigned = jx.get_auto(slim, regions, probe_col="cell")
+    assigned = jx.get_chained(slim, regions, probe_col="cell")
     counts = assigned.groupBy("region", "domain").agg(
         F.count("*").alias("n_pages")
     )
@@ -177,7 +161,7 @@ def tile_region_rollup_pretiled(
     over the un-tiled pages."""
     tiles = tiled.groupBy("tile").agg(F.count("*").alias("n_pages"))
     return (
-        jx.get_auto(tiles, regions, probe_col="tile")
+        jx.get_chained(tiles, regions, probe_col="tile")
         .groupBy("region")
         .agg(
             F.count("*").alias("n_tiles"),
@@ -301,7 +285,6 @@ def nearest_region(
     nn_res: int = REGION_RES,
     max_ring: int = 4,
     cell_col: str = "cell",
-    form: str = "auto",
 ) -> DataFrame:
     """Gap-fill region assignment: contained pages keep their region
     (``via='contains'``, ring 0); every OTHER page gets the region of
@@ -410,7 +393,7 @@ def nearest_region(
     # ONE pass over pages: containment join + a probe-keyed left join
     # against the tiny resolved relation (disjoint probe sets — a
     # contained page's probe is a region cell, never a miss probe)
-    assigned = assign_regions(pages, regions, how="left", form=form)
+    assigned = assign_regions(pages, regions, how="left")
     out = assigned.withColumn(
         "__probe", cx.to_parent(cell_col, nn_res)
     ).join(F.broadcast(nn.withColumnRenamed("region", "__nn_region")),

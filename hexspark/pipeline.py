@@ -74,7 +74,7 @@ def run_pipeline(
 
     assigned = ck.stage(
         "assigned",
-        lambda: jx.get_auto(
+        lambda: jx.get_chained(
             valid.select("page_key", "cell", "lang"), regions, probe_col="cell"
         ),
         inputs=["pages_valid", "region_map"],

@@ -42,11 +42,12 @@ def stream_region_assign(
 
     The region table is a static broadcast side; each micro-batch is a
     normal batch DataFrame inside the closure, so the *same* production
-    operator (searchsorted mapInPandas) serves both modes."""
+    operator (the chained broadcast join, ``join.get_chained``) serves
+    both modes."""
     encoded = encode_stream(stream, res)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        assigned = jx.get_indexed(batch_df, regions, probe_col="cell")
+        assigned = jx.get_chained(batch_df, regions, probe_col="cell")
         sink(assigned, batch_id)
 
     return (

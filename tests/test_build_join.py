@@ -74,16 +74,24 @@ def test_us915_len_precompacted(spark, us915):
 def test_us915_every_cell_gets_itself(spark, us915):
     # tests.rs:55-57: get(cell).0 == cell for every stored cell
     built = bx.build_region(us915, compactor="set").cache()
-    got = jx.get_indexed(
+    got = jx.get_chained(
         us915.select(F.col("cell").alias("probe")), built, probe_col="probe"
     )
     n_match = got.filter(F.col("stored_cell") == F.col("probe")).count()
     assert n_match == 42383
-    # same via the explode form
-    got2 = jx.get_explode(
-        us915.select(F.col("cell").alias("probe")), built, probe_col="probe"
+    # region_counts over the 8-level map: the probe side never crosses
+    # a Python boundary (no mapInArrow / mapInPandas / pandas UDF)
+    from hexspark import ops
+
+    assert len(jx.region_res_set(built)) == 8
+    counts = ops.region_counts(
+        us915.select("cell", F.lit("en").alias("lang")),
+        built.withColumn("region", F.lit("US915")),
     )
-    assert got2.filter(F.col("stored_cell") == F.col("probe")).count() == 42383
+    assert [tuple(r) for r in counts.collect()] == [("US915", 42383, 1)]
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInArrow", "MapInPandas", "ArrowEvalPython"):
+        assert node not in plan, plan[:3000]
 
 
 def test_us915_probe_semantics(spark, us915):
@@ -111,21 +119,25 @@ def test_us915_probe_semantics(spark, us915):
                                 np.array([K.trailing_mask(12)]))[0])
     probes.append(foreign)
     expected.append(False)
+    # invalid cells (negative, all-zero) are never contained
+    probes += [-7, 0]
+    expected += [False, False]
 
     # cross-check every probe against the naive oracle
     for p, e in zip(probes, expected):
         assert naive_contains(cells, p) == e, hex(p)
 
-    pdf = spark.createDataFrame([(int(p),) for p in probes], "probe: long")
-    for form in (jx.contains_indexed, jx.contains_explode):
-        got = (
-            form(pdf, built, probe_col="probe")
-            .orderBy("probe")
-            .collect()
-        )
-        by_probe = {row["probe"]: row["contained"] for row in got}
-        for p, e in zip(probes, expected):
-            assert by_probe[p] == e, f"{form.__name__} {hex(p)}"
+    # a NULL probe row survives the join, flagged not contained
+    pdf = spark.createDataFrame(
+        [(i, int(p)) for i, p in enumerate(probes)] + [(len(probes), None)],
+        "id: long, probe: long",
+    )
+    got = jx.contains(pdf, built, probe_col="probe").collect()
+    assert len(got) == len(probes) + 1
+    by_id = {row["id"]: row["contained"] for row in got}
+    for i, (p, e) in enumerate(zip(probes, expected)):
+        assert by_id[i] == e, hex(p)
+    assert by_id[len(probes)] is False
 
 
 def test_us915_northeast_subtree(spark, us915):
@@ -168,7 +180,7 @@ def test_monaco_compaction_and_promoted_get(spark, monaco):
         [(descendant_probe(int(c), 12), int(c)) for c in cells],
         "probe: long, leaf: long",
     )
-    got = jx.get_indexed(probes, built, probe_col="probe").cache()
+    got = jx.get_chained(probes, built, probe_col="probe").cache()
     assert got.count() == n_raw
     assert got.filter(F.col("stored_cell") != F.col("leaf")).count() == 0
     promoted = got.filter(cx.res("stored_cell") < 12).count()
@@ -210,7 +222,7 @@ def test_monaco_map_values_null_compactor(spark, monaco):
     vals = monaco.withColumn("value", F.monotonically_increasing_id())
     built = bx.build_region(vals, value_col="value", compactor="none").cache()
     assert built.count() == 825
-    got = jx.get_indexed(
+    got = jx.get_chained(
         vals.select(F.col("cell").alias("probe"), F.col("value").alias("expected")),
         built,
         probe_col="probe",
@@ -326,26 +338,24 @@ def test_subtree_agg(spark, monaco):
     assert sums.agg(F.sum("s")).collect()[0][0] == total_row
 
 
-def test_probe_indexed_arrow_equals_pandas(spark, monaco):
-    """mapInArrow and mapInPandas probe forms agree row-for-row,
-    including NULL and invalid probe cells (the Arrow null-mask path)."""
+def test_get_chained_left_keeps_null_and_invalid_probes(spark, monaco):
+    """A left get keeps every probe row: stored cells find their leaf,
+    while NULL and invalid probe cells come back with a NULL leaf."""
     built = bx.build_region(monaco, compactor="set").cache()
+    region_cells = np.array([r["cell"] for r in built.collect()], dtype=np.int64)
     cells = [int(r["cell"]) for r in monaco.limit(20).collect()]
     probe_rows = (
         [(i, c) for i, c in enumerate(cells)]
         + [(100, None), (101, -7), (102, 0)]
     )
     probes = spark.createDataFrame(probe_rows, "id: long, cell: long")
-    a = {
-        (r["id"], r["stored_cell"])
-        for r in jx.probe_indexed(probes, built, form="arrow").collect()
-    }
-    b = {
-        (r["id"], r["stored_cell"])
-        for r in jx.probe_indexed(probes, built, form="pandas").collect()
-    }
-    assert a == b
-    assert (100, None) in a and (101, None) in a
+    got = jx.get_chained(probes, built, probe_col="cell", how="left").collect()
+    by_id = {r["id"]: r["stored_cell"] for r in got}
+    assert len(got) == len(probe_rows) and len(by_id) == len(probe_rows)
+    for i, c in enumerate(cells):
+        assert by_id[i] is not None and naive_contains(region_cells, c), hex(c)
+        assert by_id[i] in set(region_cells.tolist())
+    assert by_id[100] is None and by_id[101] is None and by_id[102] is None
 
 
 def test_tile_stats_approx_tracks_exact(spark):
@@ -370,9 +380,9 @@ def test_tile_stats_approx_tracks_exact(spark):
 
 
 def test_descendants_join_chained_equals_range(spark, monaco):
-    """The chained per-resolution equi-join form of descendants_join
-    must emit exactly the range-overlap BNLJ rows, including the
-    covering-leaf case (probe deeper than the stored leaf)."""
+    """descendants_join's per-resolution equi-joins must emit exactly
+    the range-overlap BNLJ rows, including the covering-leaf case
+    (probe deeper than the stored leaf)."""
     vals = monaco.withColumn("value", (F.col("cell") % 97).cast("long"))
     built = bx.build_region(vals, value_col="value", compactor="none").cache()
     cells = np.array([r["cell"] for r in monaco.collect()], dtype=np.int64)
@@ -390,8 +400,8 @@ def test_descendants_join_chained_equals_range(spark, monaco):
     probes = spark.createDataFrame(
         [(int(p),) for p in np.unique(probe_cells)], "probe: long"
     )
-    a = jx.descendants_join(built, probes, probe_col="probe", form="chained")
-    b = jx.descendants_join(built, probes, probe_col="probe", form="range")
+    a = jx.descendants_join(built, probes, probe_col="probe")
+    b = jx._descendants_range(built, probes, "cell", "probe")
     rows_a = sorted(tuple(r) for r in a.select("probe", "cell", "value").collect())
     rows_b = sorted(tuple(r) for r in b.select("probe", "cell", "value").collect())
     assert rows_a == rows_b and len(rows_a) > 0

@@ -69,8 +69,8 @@ def test_storage_roundtrip_and_iteration_order(spark, monaco, tmp_path):
     from hexspark import join as jx
 
     probes = monaco.select(F.col("cell").alias("probe"))
-    mem = jx.get_indexed(probes, built, probe_col="probe")
-    dsk = jx.get_indexed(probes, back, probe_col="probe")
+    mem = jx.get_chained(probes, built, probe_col="probe")
+    dsk = jx.get_chained(probes, back, probe_col="probe")
     assert mem.select("probe", "stored_cell").exceptAll(
         dsk.select("probe", "stored_cell")
     ).count() == 0
@@ -490,7 +490,7 @@ def test_streaming_region_assign(spark, tmp_path):
 
     expected = {
         (r["page_key"], r["region"])
-        for r in jx.get_indexed(batch, regions, probe_col="cell")
+        for r in jx.get_chained(batch, regions, probe_col="cell")
         .select("page_key", "region").collect()
     }
     assert got == expected and len(got) > 0

@@ -117,7 +117,7 @@ def test_monaco_roundtrip_and_get_parity(spark, monaco, tmp_path):
     probes = [r["cell"] for r in monaco.limit(50).collect()]
     df_got = {
         r["probe"]: (r["stored_cell"], r["value"])
-        for r in jx.get_indexed(
+        for r in jx.get_chained(
             spark.createDataFrame([(c,) for c in probes], "probe: long"),
             built, probe_col="probe",
         ).collect()

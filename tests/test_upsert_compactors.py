@@ -177,7 +177,7 @@ def test_map_values_iter_mut(spark):
     )
     bumped = bx.map_values(region, "value", lambda v: v + 1)
     probes = spark.createDataFrame([(c,) for c in cells], "probe: long")
-    got = jx.get_indexed(probes, bumped, probe_col="probe")
+    got = jx.get_chained(probes, bumped, probe_col="probe")
     vals = {r["stored_cell"]: r["value"] for r in got.collect()}
     assert vals == {c: i + 1 for i, c in enumerate(cells)}
 
@@ -199,7 +199,7 @@ def test_mono_map_multi_region(spark):
         [(c, "EU868") for c in cells_a] + [(c, "US915") for c in cells_b],
         "probe: long, expected: string",
     )
-    res = jx.get_indexed(probes, mono, probe_col="probe")
+    res = jx.get_chained(probes, mono, probe_col="probe")
     assert res.count() == len(cells_a) + len(cells_b)
     assert res.filter(F.col("value") != F.col("expected")).count() == 0
     # stored cell is an ancestor of every probe
