@@ -361,30 +361,19 @@ def build_region(
     return compact_df(pruned, cell_col, value_col, compactor, prefix_res=cpfx)
 
 
-def build_region_local(
-    df: DataFrame,
+def build_region_np(
+    pdf: pd.DataFrame,
     cell_col: str = "cell",
     value_col: Optional[str] = None,
     compactor: str = "set",
     dedupe_policy: str = "min",
-) -> DataFrame:
-    """Driver-side build for broadcast-scale inputs (the common case:
-    region tables are tens of KB..MB by construction).
-
-    Same semantics as :func:`build_region` — validate → dedupe →
-    ancestor-wins → compact — executed in numpy/pandas on the driver
-    in one collect instead of 3-4 tiny distributed stages (saves
-    seconds of fixed stage overhead per build; equivalence is tested
-    against the distributed path on the US915/Monaco fixtures)."""
-    spark = df.sparkSession
-    cols = [cell_col] + ([value_col] if value_col else [])
-    # drop NULL cells Spark-side (the validate_cells quarantine rule):
-    # a NULL would decay toPandas' long column to float64, corrupting
-    # every >2^53 cell value, not just the null row
-    pdf = df.filter(F.col(cell_col).isNotNull()).select(*cols).toPandas()
+) -> pd.DataFrame:
+    """:func:`build_region` in numpy/pandas, no Spark: validate → dedupe
+    → ancestor-wins → compact over a non-NULL ``cell_col`` int64 frame.
+    Returns the compacted leaves as a pandas frame (``cell_col`` plus
+    ``value_col`` when given)."""
     cells = pdf[cell_col].to_numpy(dtype=np.int64)
-    ok = cnp.is_valid(cells)
-    pdf = pdf[ok]
+    pdf = pdf[cnp.is_valid(cells)]
     if value_col:
         agg = {"min": "min", "max": "max", "sum": "sum", "count": "count",
                "any": "first"}[dedupe_policy]
@@ -401,16 +390,32 @@ def build_region_local(
     order = np.lexsort((res, lo))
     hi_s = hi[order]
     runmax = np.maximum.accumulate(np.concatenate([[np.int64(-1)], hi_s[:-1]]))
-    keep_sorted = runmax < hi_s
-    keep = order[keep_sorted]
+    keep = order[runmax < hi_s]
     cells, vals = cells[keep], (vals[keep] if vals is not None else None)
     out_c, out_v = compact_np(cells, vals, compactor=compactor)
     if value_col:
-        out = pd.DataFrame({cell_col: out_c, value_col: out_v})
-    else:
-        out = pd.DataFrame({cell_col: out_c})
-    schema = df.select(*cols).schema
-    return spark.createDataFrame(out, schema=schema)
+        return pd.DataFrame({cell_col: out_c, value_col: out_v})
+    return pd.DataFrame({cell_col: out_c})
+
+
+def build_region_local(
+    df: DataFrame,
+    cell_col: str = "cell",
+    value_col: Optional[str] = None,
+    compactor: str = "set",
+    dedupe_policy: str = "min",
+) -> DataFrame:
+    """Driver-side build of a broadcast-scale Spark input: one collect
+    into :func:`build_region_np`, one ``createDataFrame`` — not 3-4 tiny
+    distributed stages (equivalence with :func:`build_region` is tested
+    on the US915/Monaco fixtures)."""
+    cols = [cell_col] + ([value_col] if value_col else [])
+    # drop NULL cells Spark-side (the validate_cells quarantine rule):
+    # a NULL would decay toPandas' long column to float64, corrupting
+    # every >2^53 cell value, not just the null row
+    pdf = df.filter(F.col(cell_col).isNotNull()).select(*cols).toPandas()
+    out = build_region_np(pdf, cell_col, value_col, compactor, dedupe_policy)
+    return df.sparkSession.createDataFrame(out, schema=df.select(*cols).schema)
 
 
 def upsert(

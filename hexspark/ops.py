@@ -8,6 +8,9 @@ membership, tile rollups, and raster↔vector assignment.
 
 from __future__ import annotations
 
+from functools import reduce
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -15,7 +18,7 @@ from . import build as bx
 from . import cells as cx
 from . import join as jx
 from .cachepool import CachePool
-from .geo import GRID_DIM, polyfill
+from .geo import GRID_DIM, polyfill, polyfill_np
 
 _PYRAMID_POOL = CachePool()
 _NEAREST_POOL = CachePool()
@@ -32,21 +35,42 @@ REGIONS: dict[str, list[tuple[float, float]]] = {
 REGION_RES = 4
 
 
+_REGION_SCHEMA = "cell bigint, region string not null"
+
+
 def region_map(spark: SparkSession, res: int = REGION_RES, compact: bool = True) -> DataFrame:
     """Vector→raster: polyfill each polygon, tag with its name, build
     the compacted broadcast region map (EqCompactor — contiguous same-
-    value areas coalesce, /root/reference/src/compaction.rs:63-72)."""
-    parts = [
-        polyfill(spark, poly, res).withColumn("region", F.lit(name))
-        for name, poly in REGIONS.items()
-    ]
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    if compact:
-        # broadcast-scale by construction → driver-side numpy build
-        return bx.build_region_local(df, value_col="region", compactor="eq")
-    return df
+    value areas coalesce, HexTree's src/compaction.rs:63-72);
+    ``compact=False`` keeps the raw fills.  No Spark job runs until the
+    map is used (:func:`_build_regions`)."""
+    return _build_regions(spark, [(n, p, ()) for n, p in REGIONS.items()], res, compact)
+
+
+def _build_regions(spark: SparkSession, polygons, res: int, compact: bool) -> DataFrame:
+    """Region map of ``(name, exterior, holes)`` polygons, built on the
+    driver since it is broadcast-scale metadata: numpy polyfill per
+    polygon, :func:`build.build_region_np`, one ``createDataFrame``.  A
+    polygon past ``polyfill_np``'s ``flat_budget`` takes the distributed
+    polyfill, and the map then builds through ``build_region_local``."""
+    fills, spill = [], []
+    for name, verts, holes in polygons:
+        try:
+            cells = polyfill_np(verts, res, holes=holes)
+            fills.append(pd.DataFrame({"cell": cells, "region": name}))
+        except ValueError:
+            spill.append(
+                polyfill(spark, verts, res, holes=holes).withColumn("region", F.lit(name))
+            )
+    if fills:
+        pdf = pd.concat(fills, ignore_index=True)
+        if not spill:
+            if compact:
+                pdf = bx.build_region_np(pdf, value_col="region", compactor="eq")
+            return spark.createDataFrame(pdf, _REGION_SCHEMA)
+        spill.append(spark.createDataFrame(pdf, _REGION_SCHEMA))
+    df = reduce(DataFrame.unionByName, spill)
+    return bx.build_region_local(df, value_col="region", compactor="eq") if compact else df
 
 
 def assign_regions(
@@ -707,26 +731,21 @@ def regions_from_geojson(
     compact: bool = True,
 ) -> DataFrame:
     """Load a GeoJSON FeatureCollection (path, JSON string, or parsed
-    dict) of Polygon / MultiPolygon features into the compacted region
-    map :func:`region_map` builds from the inline REGIONS dict — the
-    production polygon-source path (any GIS tool exports this format).
+    dict) of Polygon / MultiPolygon features into the region map
+    :func:`region_map` builds from the inline REGIONS dict (same build,
+    same schema) — the production polygon-source path (any GIS tool
+    exports this format).
 
     Interior rings (holes) are honored: each polygon rasterizes as
     exterior-fill minus its holes' fills (ContainsCentroid on both
     rings — the h3o polyfill semantics the reference tests rely on).
     GeoJSON positions are (lon, lat) — flipped here to the engine's
-    (lat, lon).  Region
-    names come from ``properties[name_property]``, falling back to the
-    feature ``id`` or its index.  Polygons of one MultiPolygon share
-    the feature's name (their cells union under the EqCompactor).
-
-    Parsing AND rasterization are driver-side by design: region
-    collections are broadcast-scale metadata (thousands of polygons),
-    not data — each polygon polyfills in numpy (geo.polyfill_np,
-    microseconds per feature; one-Spark-job-per-feature would turn a
-    10^4-feature file into hours of driver-side job planning), with
-    the distributed polyfill as the fallback for a polygon too large
-    for the driver.  The cell table it produces is what distributes.
+    (lat, lon).  Region names come from ``properties[name_property]``,
+    falling back to the feature ``id`` or its index.  Polygons of one
+    MultiPolygon share the feature's name (their cells union under the
+    EqCompactor).  Parsing, rasterization and the build run on the
+    driver (:func:`_build_regions`): one Spark job per feature would
+    turn a 10^4-feature file into hours of job planning.
     """
     import json as _json
     import os as _os
@@ -739,14 +758,20 @@ def regions_from_geojson(
             gj = _json.loads(geojson)
     else:
         gj = geojson
-    from .geo import polyfill_np
-
     if gj.get("type") != "FeatureCollection":
         raise ValueError(
             f"expected a FeatureCollection, got {gj.get('type')!r}"
         )
-    parts = []
-    rows: list[tuple[int, str]] = []
+
+    def _open(ring):
+        # GeoJSON closes rings (first == last) in (lon, lat); polyfill
+        # takes an open vertex list in (lat, lon)
+        verts = [(float(lat), float(lon)) for lon, lat in ring]
+        if len(verts) > 1 and verts[0] == verts[-1]:
+            verts = verts[:-1]
+        return verts
+
+    polygons = []
     for idx, feat in enumerate(gj.get("features", [])):
         geom = feat.get("geometry") or {}
         gtype = geom.get("type")
@@ -761,37 +786,10 @@ def regions_from_geojson(
             raise ValueError(
                 f"feature {name!r}: unsupported geometry {gtype!r}"
             )
-        for rings in polys:
-            def _open(ring):
-                # GeoJSON closes rings (first == last); polyfill takes
-                # an open vertex list in (lat, lon)
-                verts = [(float(lat), float(lon)) for lon, lat in ring]
-                if len(verts) > 1 and verts[0] == verts[-1]:
-                    verts = verts[:-1]
-                return verts
-
-            verts = _open(rings[0])
-            # interior rings: exterior fill minus hole fills
-            # (ContainsCentroid on both — h3o polyfill semantics)
-            hole_verts = [_open(r) for r in rings[1:]]
-            try:
-                for c in polyfill_np(verts, res, holes=hole_verts):
-                    rows.append((int(c), str(name)))
-            except ValueError:
-                parts.append(
-                    polyfill(spark, verts, res, holes=hole_verts)
-                    .withColumn("region", F.lit(str(name)))
-                )
-    if not parts and not rows:
+        polygons += [(str(name), _open(r[0]), [_open(h) for h in r[1:]]) for r in polys]
+    if not polygons:
         raise ValueError("FeatureCollection has no polygon features")
-    df = None
-    if rows:
-        df = spark.createDataFrame(rows, ["cell", "region"])
-    for p in parts:
-        df = p if df is None else df.unionByName(p)
-    if compact:
-        return bx.build_region_local(df, value_col="region", compactor="eq")
-    return df
+    return _build_regions(spark, polygons, res, compact)
 
 
 def regions_to_geojson(

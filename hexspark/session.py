@@ -45,24 +45,24 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("HEXSPARK_DRIVER_MEM", "8g"))
-        # whole-stage codegen emits one compiled class per plan; a long
-        # query suite fills the JVM's default ~240m code cache and HotSpot
-        # silently falls back to interpreted paths (measured: late-suite
-        # q14_tile_pyramid 7.8s -> 6.0s with 512m; raised to 768m in r7
-        # when the widened-input plans added a stage per operator and
-        # late-suite queries re-inflated ~25-40% vs isolated).  Must be set BEFORE
-        # the driver JVM launches.  Caller/env options are APPENDED, not
-        # substituted — bench_scaling's '-XX:+UseParallelGC' must not
-        # silently drop this fix; a caller overriding the same flag wins
-        # anyway (the JVM takes the LAST occurrence of a repeated flag).
-        .config("spark.driver.extraJavaOptions", _BASE_DRIVER_JAVA_OPTS + (
-            " " + os.environ["HEXSPARK_DRIVER_JAVA_OPTS"]
-            if os.environ.get("HEXSPARK_DRIVER_JAVA_OPTS") else ""
-        ))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
-        if k == "spark.driver.extraJavaOptions":
-            v = f"{_BASE_DRIVER_JAVA_OPTS} {v}"
+    # whole-stage codegen emits one compiled class per plan; a long
+    # query suite fills the JVM's default ~240m code cache and HotSpot
+    # silently falls back to interpreted paths (measured: late-suite
+    # q14_tile_pyramid 7.8s -> 6.0s with 512m; raised to 768m in r7
+    # when the widened-input plans added a stage per operator and
+    # late-suite queries re-inflated ~25-40% vs isolated).  Must be set
+    # BEFORE the driver JVM launches.  Env, then caller options are
+    # APPENDED, not substituted — bench_scaling's '-XX:+UseParallelGC'
+    # must not silently drop this fix; a caller overriding the same flag
+    # wins anyway (the JVM takes the LAST occurrence of a repeated flag).
+    conf = dict(extra_conf or {})
+    conf["spark.driver.extraJavaOptions"] = " ".join(filter(None, (
+        _BASE_DRIVER_JAVA_OPTS,
+        os.environ.get("HEXSPARK_DRIVER_JAVA_OPTS"),
+        conf.get("spark.driver.extraJavaOptions"),
+    )))
+    for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()

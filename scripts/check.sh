@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Fast pre-ship gate (~3 min): import sanity, driver-contract smoke,
-# oracle parity. Full suite: python -m pytest tests/ -q (~6 min).
+# region-map equivalence (the map feeds 7 oracle-gated queries), oracle
+# parity. Full suite: python -m pytest tests/ -q (~8.5 min).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 python - <<'PY'
@@ -10,4 +11,5 @@ missing = sorted(set(qs) - set(osql))
 assert not missing, f"queries without oracles: {missing}"
 print(f"contract ok: {len(qs)} queries, {len(osql)} oracles")
 PY
+python -m pytest tests/test_geo.py -q -k region
 python -m pytest tests/test_oracle_parity.py -q

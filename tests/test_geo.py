@@ -3,6 +3,7 @@
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hexspark import cells_np as cnp
 from hexspark import geo
@@ -525,7 +526,8 @@ def test_hotspot_tiles_planted(spark):
 def test_regions_from_geojson(spark, tmp_path):
     """A FeatureCollection (Polygon + MultiPolygon, closed lon-lat
     rings) loads into the same compacted region map the inline dict
-    produces; holes and non-collections raise."""
+    produces; non-collections raise (holes are honored — see
+    test_regions_from_geojson_with_holes)."""
     import json
 
     import pytest as _pytest
@@ -655,6 +657,97 @@ def test_regions_geojson_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(
         map(tuple, orig.collect())
     )
+
+
+def _distributed_region_map(spark, res, compact=True):
+    """The reference build: distributed polyfill per inline polygon,
+    then the distributed :func:`build.build_region`."""
+    from hexspark.build import build_region
+    from hexspark.ops import REGIONS
+
+    parts = [
+        polyfill(spark, poly, res).withColumn("region", F.lit(name))
+        for name, poly in REGIONS.items()
+    ]
+    df = parts[0].unionByName(parts[1]).unionByName(parts[2])
+    if not compact:
+        return df
+    return build_region(df, value_col="region", compactor="eq")
+
+
+def _assert_same_map(spark, got, res, compact):
+    """Rows equal the distributed build's; the schema is the polyfill
+    union's for compacted and raw maps alike (build_region's groupBy
+    would report ``region`` nullable)."""
+    want = _distributed_region_map(spark, res, compact)
+    assert got.schema == _distributed_region_map(spark, res, False).schema
+    assert [(f.name, f.dataType, f.nullable) for f in got.schema] == [
+        ("cell", T.LongType(), True), ("region", T.StringType(), False)
+    ]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+@pytest.mark.parametrize("res,compact", [(3, True), (4, True), (5, True), (4, False)])
+def test_region_map_equals_distributed_build(spark, res, compact):
+    """The driver-side region map (numpy polyfill + numpy build) has the
+    rows and schema (nullability included) of the distributed build."""
+    from hexspark import ops
+
+    got = ops.region_map(spark, res=res, compact=compact)
+    _assert_same_map(spark, got, res, compact)
+    if res == 4 and compact:
+        assert got.count() == 861
+
+
+def test_region_map_builds_without_spark_jobs(spark):
+    """Building a region map — inline REGIONS or GeoJSON, compacted or
+    not — launches no Spark job; using it does."""
+    from hexspark import ops
+
+    def ring(poly):
+        r = [[lon, lat] for lat, lon in poly]
+        return r + [r[0]]
+
+    gj = {"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {"name": n},
+         "geometry": {"type": "Polygon", "coordinates": [ring(p)]}}
+        for n, p in ops.REGIONS.items()
+    ]}
+    sc = spark.sparkContext
+    group = "region-map-build"
+    sc.setJobGroup(group, "region map build")
+    try:
+        maps = [
+            ops.region_map(spark),
+            ops.region_map(spark, res=5, compact=False),
+            ops.regions_from_geojson(spark, gj, res=4),
+        ]
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the guard can see jobs: the first use of a map runs one
+        assert maps[0].count() == 861
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.mark.parametrize("spilled", [("beta",), ("alpha", "beta", "gamma")])
+@pytest.mark.parametrize("compact", [True, False])
+def test_region_map_polyfill_np_fallback(spark, monkeypatch, spilled, compact):
+    """A polygon past polyfill_np's flat_budget takes the distributed
+    polyfill; the map still equals the distributed reference."""
+    from hexspark import ops
+
+    spill = [ops.REGIONS[n] for n in spilled]
+    real = ops.polyfill_np
+
+    def budgeted(polygon, res, **kw):
+        if polygon in spill:
+            raise ValueError("polyfill_np: over flat_budget")
+        return real(polygon, res, **kw)
+
+    monkeypatch.setattr(ops, "polyfill_np", budgeted)
+    _assert_same_map(spark, ops.region_map(spark, res=4, compact=compact), 4, compact)
 
 
 def test_polyfill_np_matches_distributed(spark):
