@@ -30,6 +30,7 @@ from typing import Callable, Optional
 
 import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_hexspark_manifest.json"
 
@@ -154,8 +155,9 @@ class Checkpointer:
         _, mpath = self._paths(name)
         return self._read_json(mpath)
 
+    @staticmethod
     def _resume_ok(
-        self, name: str, inputs: Optional[list[str]], params: Optional[dict]
+        man: Optional[dict], inputs: Optional[list[str]], params: Optional[dict]
     ) -> bool:
         """A completed stage is reused only when its recorded WIRING
         matches the current call: a pipeline re-run with different
@@ -163,13 +165,23 @@ class Checkpointer:
         or different parameters must recompute, not silently return
         the old configuration's rows.  Manifests written before params
         existed have no key → treated as params=None."""
-        man = self.manifest(name)
         return bool(
             man
             and man.get("complete", False)
             and man.get("inputs", []) == (inputs or [])
             and man.get("params") == params
         )
+
+    def _read_back(self, name: str, schema: Optional[dict]) -> DataFrame:
+        """Read a stage's Parquet back.  With the manifest's recorded
+        schema the read launches no Spark job; without one (manifests
+        written before schemas were recorded) Spark infers it from the
+        footers, which costs one job.  Spark reads Parquet back all
+        nullable either way, so both give the same schema."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(self._spark_path(name))
 
     def stage(
         self,
@@ -181,8 +193,9 @@ class Checkpointer:
         params: Optional[dict] = None,
     ) -> DataFrame:
         d, mpath = self._paths(name)
-        if self._resume_ok(name, inputs, params):
-            return self.spark.read.parquet(self._spark_path(name))
+        man = self._read_json(mpath)
+        if self._resume_ok(man, inputs, params):
+            return self._read_back(name, man.get("schema"))
         t0 = time.time()
         df = fn()
         df.write.mode(mode).parquet(self._spark_path(name))
@@ -205,13 +218,14 @@ class Checkpointer:
             "n_partitions": len(parts),
             "partitions": parts,
             "quarantined_rows": quarantined,
+            "schema": df.schema.jsonValue(),
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         tmp = mpath + ".tmp"
         with self._fs.open_output_stream(tmp) as f:
             f.write(json.dumps(man, indent=1).encode("utf-8"))
         self._fs.move(tmp, mpath)  # atomic on local/HDFS; copy+delete on S3
-        return self.spark.read.parquet(self._spark_path(name))
+        return self._read_back(name, man["schema"])
 
     def load(self, name: str) -> DataFrame:
         """Read back a COMPLETED parquet stage without offering a
@@ -219,15 +233,17 @@ class Checkpointer:
         appends read the base run's signature/pair tables this way).
         Raises if the stage never completed: silently recomputing here
         would defeat the caller's no-recompute contract."""
-        if not self.is_complete(name):
+        man = self.manifest(name)
+        if not (man and man.get("complete", False)):
             raise ValueError(
                 f"stage {name!r} has no complete manifest under"
                 f" {self.root!r} — run its pipeline first"
             )
-        return self.spark.read.parquet(self._spark_path(name))
+        return self._read_back(name, man.get("schema"))
 
     def _register_bucketed(
-        self, tbl: str, loc: str, bucket_col: str, n_buckets: int
+        self, tbl: str, loc: str, bucket_col: str, n_buckets: int,
+        schema: Optional[dict],
     ) -> DataFrame:
         """Re-create the bucketed-table catalog entry over EXISTING
         stage files — the cross-driver-restart resume path: the
@@ -235,10 +251,14 @@ class Checkpointer:
         did not.  Spark encodes the bucket id in each file name at
         write time, so a table re-registered with the same CLUSTERED BY
         spec scans the old files ``Bucketed: true`` (asserted in
-        tests/test_checkpoint_storage.py)."""
-        schema = self.spark.read.parquet(loc).schema
+        tests/test_checkpoint_storage.py).  The column list comes from
+        the manifest's schema when it has one, else from inference."""
+        fields = (
+            StructType.fromJson(schema) if schema is not None
+            else self.spark.read.parquet(loc).schema
+        ).fields
         cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+            f"`{f.name}` {f.dataType.simpleString()}" for f in fields
         )
         self.spark.sql(
             f"CREATE TABLE `{tbl}` ({cols}) USING PARQUET"
@@ -286,8 +306,7 @@ class Checkpointer:
         loc = self._spark_path(name) + "/data"
         man = self.manifest(name)
         if (
-            self._resume_ok(name, inputs, params)
-            and man is not None
+            self._resume_ok(man, inputs, params)
             and man.get("bucket_col") == bucket_col
             and man.get("n_buckets") == n_buckets
         ):
@@ -295,7 +314,8 @@ class Checkpointer:
                 return self.spark.table(tbl)
             if man.get("location"):
                 return self._register_bucketed(
-                    tbl, man["location"], bucket_col, n_buckets
+                    tbl, man["location"], bucket_col, n_buckets,
+                    man.get("schema"),
                 )
             # legacy managed-table manifest (no recorded location): the
             # registration died with its session and the data lives in
@@ -333,6 +353,7 @@ class Checkpointer:
             "n_partitions": len(parts),
             "partitions": parts,
             "quarantined_rows": None,
+            "schema": out.schema.jsonValue(),
             "table": tbl,
             "location": loc,
             "bucket_col": bucket_col,

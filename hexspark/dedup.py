@@ -6,9 +6,10 @@
 * simhash        — 64-bit token-hash majority signature, hamming buckets
 
 Hash functions are deterministic integer arithmetic over md5 prefixes
-so the exact/jaccard/minhash paths all have DuckDB oracle twins; the
-hot paths are built-in Column ops (explode/groupBy/join) that Catalyst
-plans with map-side partial aggregation and AQE skew handling.
+so the exact/jaccard/minhash/simhash paths all have DuckDB oracle
+twins; the hot paths are built-in Column ops (explode/groupBy/join)
+that Catalyst plans with map-side partial aggregation and AQE skew
+handling, except the simhash signature, a row-local Arrow kernel.
 """
 
 from __future__ import annotations
@@ -349,10 +350,98 @@ def dd_simhash(bits: int = 32) -> str:
     """
 
 
+# docs per unpack/reduceat slice in the simhash kernel: its 0/1 bit
+# matrix holds 64 bytes per token of _SIMHASH_SLICE docs
+_SIMHASH_SLICE = 512
+# distinct tokens the kernel's per-task md5 cache holds before it starts
+# over (~100 B each), so a Python worker's memory stays bounded
+_SIMHASH_CACHE = 1 << 20
+
+
+def _simhash_kernel(bits: int):
+    """``mapInArrow`` body for :func:`simhash`: batches of (id, normalized
+    text as UTF-8 bytes) → batches of (id, simhash).
+
+    Per batch: split every text on ``b" "``, dictionary-encode the
+    flattened tokens, give each distinct token its bit word (md5 once
+    per token per task — the cache lives as long as the partition
+    iterator, up to ``_SIMHASH_CACHE`` tokens), gather one word per
+    token, unpack to a (tokens x 64) 0/1 matrix and ``np.add.reduceat``
+    it per doc.  Bit j is set when more
+    than half of the doc's tokens carry it (the sign of the ±1 sum);
+    bits at or past ``bits`` are masked off every word, so they never
+    win.  NULL text emits no row."""
+    mask = (1 << bits) - 1
+
+    def run(batches):
+        import hashlib
+
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        words: dict = {}
+
+        def word(tok: bytes) -> int:
+            # _h64: the first 15 hex digits of md5 = its top 60 bits
+            w = int.from_bytes(hashlib.md5(tok).digest()[:8], "big") >> 4
+            if bits > 60:  # bits 60..63 from _h64b's low 4 bits
+                h2 = int.from_bytes(hashlib.md5(b"b:" + tok).digest()[:8], "big") >> 4
+                w |= (h2 & 0xF) << 60
+            return w & mask
+
+        for batch in batches:
+            batch = batch.filter(pc.is_valid(batch.column(1)))
+            if batch.num_rows == 0:
+                continue
+            toks = pc.split_pattern(batch.column(1), " ")
+            lens = pc.list_value_length(toks).to_numpy().astype(np.int64)
+            enc = pc.list_flatten(toks).dictionary_encode()
+            vocab = enc.dictionary.to_pylist()
+            if len(words) + len(vocab) > _SIMHASH_CACHE:
+                words.clear()
+            for t in vocab:
+                if t not in words:
+                    words[t] = word(t)
+            tok_words = np.fromiter(
+                (words[t] for t in vocab), dtype="<u8", count=len(vocab)
+            )[enc.indices.to_numpy()]
+            offs = np.concatenate(([0], np.cumsum(lens)))
+            sigs = []
+            for lo in range(0, batch.num_rows, _SIMHASH_SLICE):
+                hi = min(lo + _SIMHASH_SLICE, batch.num_rows)
+                m = np.unpackbits(
+                    tok_words[offs[lo]:offs[hi]].view(np.uint8).reshape(-1, 8),
+                    axis=1, bitorder="little",
+                )
+                ones = np.add.reduceat(m, offs[lo:hi] - offs[lo], axis=0, dtype=np.int64)
+                won = 2 * ones > lens[lo:hi, None]
+                # bit j of the packed little-endian word is bit j of the
+                # signature, so bit 63 lands on the int64 sign bit
+                sigs.append(
+                    np.packbits(won, axis=1, bitorder="little")
+                    .view("<u8").ravel().view(np.int64)
+                )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(np.concatenate(sigs), pa.int64())],
+                names=["id", "simhash"],
+            )
+
+    return run
+
+
 def simhash(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id", bits: int = 32) -> DataFrame:
     """SimHash: per-token md5-derived hash; signature bit j is the sign
-    of the majority over tokens of bit j.  Explode + groupBy with one
-    conditional-sum per bit (all JVM-side).
+    of the majority over tokens of bit j.  One row per input row with
+    non-NULL text (``key_col`` is the document key, one row per doc).
+
+    A row-local kernel, no shuffle: the JVM normalizes each text with
+    the exact tokenizer expression :func:`dd_simhash` mirrors (trim
+    spaces, lower, collapse ``[ \\t\\n\\x0B\\f\\r]+`` runs to one space)
+    and hands UTF-8 bytes to a ``mapInArrow`` kernel
+    (:func:`_simhash_kernel`) that splits on ``" "``, hashes and sums
+    bit votes in numpy.  Lower-casing stays in the JVM because Java's
+    and Python's Unicode case tables are not the same version.
 
     ``bits`` up to 64 — the production width (32 bits saturates with
     birthday collisions around 10^5 docs; 64 is the Manku et al.
@@ -364,34 +453,21 @@ def simhash(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id", bi
     share, so the signature stays cross-engine hash-exact)."""
     if not 1 <= bits <= 64:
         raise ValueError(f"simhash bits must be in 1..64, got {bits}")
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from .skew import widen_input
 
-    toks = widen_input(docs.select(F.col(key_col), F.col(text_col))).select(
-        F.col(key_col).alias("id"),
-        F.explode(
-            F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"[ \t\n\x0B\f\r]+", " "), " ")
-        ).alias("tok"),
+    src = docs.select(F.col(key_col), F.col(text_col))
+    schema = StructType([
+        StructField("id", src.schema[key_col].dataType, True),
+        StructField("simhash", LongType(), False),
+    ])
+    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"[ \t\n\x0B\f\r]+", " ")
+    return (
+        widen_input(src)
+        .select(F.col(key_col).alias("id"), norm.cast("binary").alias("t"))
+        .mapInArrow(_simhash_kernel(bits), schema)
     )
-    toks = toks.withColumn("h", _h64(F.col("tok")))
-    if bits > 60:
-        toks = toks.withColumn("h2", _h64b(F.col("tok")))
-    aggs = [
-        F.sum(
-            F.when(
-                F.shiftrightunsigned(
-                    F.col("h" if j < 60 else "h2"), j if j < 60 else j - 60
-                ).bitwiseAND(F.lit(1)) == 1,
-                1,
-            ).otherwise(-1)
-        ).alias(f"b{j}")
-        for j in range(bits)
-    ]
-    summed = toks.groupBy("id").agg(*aggs)
-    sig = F.lit(0).cast("long")
-    for j in range(bits):
-        bit_val = (1 << j) if j < 63 else -(1 << 63)
-        sig = sig + F.when(F.col(f"b{j}") > 0, F.lit(bit_val).cast("long")).otherwise(0)
-    return summed.select("id", sig.alias("simhash"))
 
 
 def simhash_pairs(
@@ -605,46 +681,46 @@ def dup_clusters(
     # size probe and fetch in ONE job: an over-limit collect comes back
     # with driver_max_edges + 1 rows and falls through to the
     # distributed rounds (the persisted edge relation is then reused)
-    rows = (
-        edges.limit(driver_max_edges + 1).collect()
+    tbl = (
+        edges.limit(driver_max_edges + 1).toArrow()
         if driver_max_edges > 0
         else None
     )
-    if rows is not None and len(rows) <= driver_max_edges:
+    if tbl is not None and tbl.num_rows <= driver_max_edges:
+        import numpy as np
+        import pyarrow as pa
         from pyspark.sql.types import StructField, StructType
 
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in rows:
-            a, b = row[0], row[1]
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        roots: dict = {}
-        for x in parent:
-            r = find(x)
-            m = roots.get(r)
-            if m is None or x < m:
-                roots[r] = x
+        # dense indices in id order, so the min index is the min id
+        ids, inv = np.unique(
+            np.concatenate([tbl.column("a").to_numpy(), tbl.column("b").to_numpy()]),
+            return_inverse=True,
+        )
+        a, b = np.split(inv, 2)
+        # hook every edge's larger root onto its smaller one, then jump
+        # pointers until every tree is a star; parent[x] <= x throughout,
+        # so a fixpoint labels each component with its min id
+        parent = np.arange(len(ids))
+        while True:
+            ra, rb = parent[a], parent[b]
+            lo = np.minimum(ra, rb)
+            nxt = parent.copy()
+            np.minimum.at(nxt, ra, lo)
+            np.minimum.at(nxt, rb, lo)
+            while not np.array_equal(nxt[nxt], nxt):
+                nxt = nxt[nxt]
+            if np.array_equal(nxt, parent):
+                break
+            parent = nxt
         id_type = pairs.schema[ida].dataType
         schema = StructType([
             StructField("id", id_type, False),
             StructField("cluster", id_type, False),
         ])
+        # from an Arrow table (empty included): a local relation, so no
+        # Python worker starts to convert a list of rows
         out = pairs.sparkSession.createDataFrame(
-            [(x, roots[find(x)]) for x in parent], schema
+            pa.table({"id": ids, "cluster": ids[parent]}), schema
         )
         if all_ids is not None:
             singles = (

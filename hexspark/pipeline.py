@@ -315,45 +315,28 @@ def run_corpus_pipeline(
     # NOT its own checkpoint stage: it is a two-aggregate derivation of
     # the doc_features checkpoint (deterministic, output-scale), and a
     # stage's fixed write/read/manifest cost would exceed recomputing
-    # it on resume.  One tiny probe job (a single aggregate over the
-    # checkpointed features — cheaper than materializing the edge join)
-    # decides the fast path: with no exact dups the anti-join and the
-    # pair union are dead weight, and skipping them reproduces the
-    # un-collapsed plan exactly.
-    _probe = feats.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.count_distinct("fp").alias("__nfp"),
-    ).first()
-    has_exact_dups = _probe["__n"] != _probe["__nfp"]
-    if has_exact_dups:
-        rep_docs = docs.join(
-            F.broadcast(rep_edges.select(F.col("idb").alias("doc_id"))),
-            on="doc_id",
-            how="left_anti",
-        )
-    else:
-        rep_docs = docs
+    # it on resume.  The anti-join and the union always run, with no
+    # probe job to skip them: with no exact dups the edge relation is
+    # empty and the pairs come out unchanged, and on a resume the
+    # read-back stages never need to know.
+    rep_docs = docs.join(
+        F.broadcast(rep_edges.select(F.col("idb").alias("doc_id"))),
+        on="doc_id",
+        how="left_anti",
+    )
 
     if pair_miner == "simhash":
         sig_fn = lambda: ddp.simhash(rep_docs, bits=bits)  # noqa: E731
-        pair_fn = lambda: (  # noqa: E731
-            ddp.simhash_pairs_from_sigs(sigs, max_hamming=max_hamming, bits=bits)
-            .unionByName(rep_edges)
-            if has_exact_dups
-            else ddp.simhash_pairs_from_sigs(sigs, max_hamming=max_hamming, bits=bits)
-        )
+        pair_fn = lambda: ddp.simhash_pairs_from_sigs(  # noqa: E731
+            sigs, max_hamming=max_hamming, bits=bits
+        ).unionByName(rep_edges)
     else:
-        pair_src = lambda: ddp.lsh_candidates(  # noqa: E731
-            sigs, bands=MINHASH_BANDS, rows_per_band=MINHASH_ROWS
-        )
         sig_fn = lambda: ddp.minhash_signature(  # noqa: E731
             rep_docs, num_hashes=MINHASH_BANDS * MINHASH_ROWS, n=MINHASH_SHINGLE_N
         )
-        pair_fn = lambda: (  # noqa: E731
-            pair_src().unionByName(rep_edges.select("ida", "idb"))
-            if has_exact_dups
-            else pair_src()
-        )
+        pair_fn = lambda: ddp.lsh_candidates(  # noqa: E731
+            sigs, bands=MINHASH_BANDS, rows_per_band=MINHASH_ROWS
+        ).unionByName(rep_edges.select("ida", "idb"))
 
     sigs = ck.stage(
         "signatures", sig_fn, inputs=["doc_features"], params=p_sig

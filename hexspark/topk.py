@@ -199,9 +199,10 @@ def topk_per_key_by_draw(
         )
         .select(*keys)
     )
-    bad_keys = short.collect()  # tiny: undershot keys only
-    if not bad_keys:
+    bad_keys = short.toArrow()  # tiny: undershot keys only
+    if bad_keys.num_rows == 0:
         return res
+    # from Arrow, not a list of Rows: a local relation, no Python workers
     bad = df.sparkSession.createDataFrame(bad_keys, short.schema)
     rescue = topk_per_key(
         probe.join(F.broadcast(bad), list(keys), "semi"),

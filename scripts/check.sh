@@ -1,7 +1,9 @@
 #!/usr/bin/env bash
-# Fast pre-ship gate (~3 min): import sanity, driver-contract smoke,
-# region-map equivalence (the map feeds 7 oracle-gated queries), oracle
-# parity. Full suite: python -m pytest tests/ -q (~8.5 min).
+# Fast pre-ship gate (~5 min): import sanity, driver-contract smoke,
+# region-map equivalence (the map feeds 7 oracle-gated queries), the
+# simhash kernel and corpus pipeline (they feed 5: simhash,
+# simhash_pairs, simhash_pairs64, incremental_keepers, dup_clusters),
+# oracle parity. Full suite: python -m pytest tests/ -q (~8.5 min).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 python - <<'PY'
@@ -12,4 +14,6 @@ assert not missing, f"queries without oracles: {missing}"
 print(f"contract ok: {len(qs)} queries, {len(osql)} oracles")
 PY
 python -m pytest tests/test_geo.py -q -k region
+python -m pytest tests/test_text_dedup.py -q -k simhash
+python -m pytest tests/test_pipeline.py -q -k corpus
 python -m pytest tests/test_oracle_parity.py -q

@@ -45,6 +45,81 @@ def test_checkpoint_resume_and_lineage(spark, tmp_path):
     assert calls["n"] == 2
 
 
+def _typed_frame(spark):
+    """Nested and non-nullable columns: the read-back schema must match
+    inference on every level, not just on flat longs."""
+    return spark.range(20).select(
+        F.col("id"),
+        F.lit(1).alias("one"),
+        F.array(F.lit(1), F.col("id").cast("int")).alias("arr"),
+        F.struct(F.lit("x").alias("s"), F.col("id").alias("i")).alias("st"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.when(F.col("id") % 3 == 0, F.lit("t")).alias("maybe"),
+        F.lit(1.5).cast("decimal(10,2)").alias("d"),
+        F.timestamp_seconds(F.col("id")).alias("ts"),
+    )
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_checkpoint_readback_launches_no_jobs(spark, tmp_path):
+    """A resumed stage and a load read back with the manifest's schema:
+    no schema-inference job, and the schema (names, types, nullability)
+    is what inference gives."""
+    root = str(tmp_path / "rb")
+    ck = Checkpointer(spark, root)
+    fresh = ck.stage("s", lambda: _typed_frame(spark))
+    inferred = spark.read.parquet(os.path.join(root, "s")).schema
+    assert fresh.schema == inferred
+    assert ck.manifest("s")["schema"] == _typed_frame(spark).schema.jsonValue()
+
+    def boom():
+        raise AssertionError("a complete stage must not recompute")
+
+    (resumed, loaded), jobs = _jobs_in_group(
+        spark, "ck-readback", lambda: (ck.stage("s", boom), ck.load("s"))
+    )
+    assert jobs == []
+    assert resumed.schema == inferred and loaded.schema == inferred
+    # the guard can see jobs: using the read-back runs one
+    n, jobs = _jobs_in_group(spark, "ck-readback-use", loaded.count)
+    assert n == 20 and jobs
+    assert sorted(map(tuple, resumed.collect())) == sorted(
+        map(tuple, spark.read.parquet(os.path.join(root, "s")).collect())
+    )
+
+
+def test_checkpoint_manifest_without_schema_reads_back(spark, tmp_path):
+    """Manifests written before schemas were recorded still resume and
+    load, through inference."""
+    root = str(tmp_path / "legacy")
+    ck = Checkpointer(spark, root)
+    want = sorted(map(tuple, ck.stage("s", lambda: _typed_frame(spark)).collect()))
+    inferred = spark.read.parquet(os.path.join(root, "s")).schema
+    mpath = os.path.join(root, "s", "_hexspark_manifest.json")
+    with open(mpath) as f:
+        man = json.load(f)
+    del man["schema"]
+    with open(mpath, "w") as f:
+        json.dump(man, f)
+
+    def boom():
+        raise AssertionError("a complete stage must not recompute")
+
+    for df in (ck.stage("s", boom), ck.load("s")):
+        assert df.schema == inferred
+        assert sorted(map(tuple, df.collect())) == want
+
+
 def test_checkpoint_quarantine_metrics(spark, tmp_path):
     ck = Checkpointer(spark, str(tmp_path / "q"))
     src = spark.createDataFrame([(-5,), (0,), (0x85283473FFFFFFF,)], "cell: long")
@@ -234,7 +309,12 @@ def test_stage_bucketed_survives_driver_restart(spark, tmp_path):
         # catalog death: external table → DROP removes only the entry
         spark.sql(f"DROP TABLE `{tbl}`")
         assert not spark.catalog.tableExists(tbl)
-        out2 = ck.stage_bucketed("tiled", build, bucket_col="tile", n_buckets=8)
+        # re-registration takes its columns from the manifest: no job
+        out2, jobs = _jobs_in_group(
+            spark, "ck-rebucket",
+            lambda: ck.stage_bucketed("tiled", build, bucket_col="tile", n_buckets=8),
+        )
+        assert jobs == []
         assert calls == [1], "resume must not recompute"
         assert sorted((r["page_key"], r["tile"]) for r in out2.collect()) == rows1
         assert ck.manifest("tiled")["finished_at"] == man1["finished_at"]

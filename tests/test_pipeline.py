@@ -112,6 +112,52 @@ def test_corpus_pipeline_exact_dup_precollapse(spark, sf_dir, tmp_path):
     assert {(k, v) for k, v in clusters.items()} == want
 
 
+def test_corpus_pipeline_no_exact_dups_equals_uncollapsed(spark, sf_dir, tmp_path):
+    """With zero exact duplicates the always-on pre-collapse (anti-join
+    plus an empty rep-edge union) must leave pairs, clusters and
+    keepers exactly as the un-collapsed miner gives them."""
+    from hexspark import dedup as ddp
+    from hexspark import text as tx
+    from hexspark.pipeline import _doc_features, run_corpus_pipeline, select_keepers
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    firsts = docs.groupBy(tx.fingerprint(F.col("text")).alias("fp")).agg(
+        F.min("doc_id").alias("doc_id")
+    )
+    corpus = docs.join(firsts.select("doc_id"), on="doc_id", how="leftsemi")
+    assert corpus.count() == firsts.count()  # no exact dups left
+
+    out = run_corpus_pipeline(spark, sf_dir, str(tmp_path / "nodups"), docs=corpus)
+    want_pairs = ddp.simhash_pairs(corpus, max_hamming=3, bits=64)
+    assert sorted(map(tuple, out["dup_pairs"].collect())) == sorted(
+        map(tuple, want_pairs.collect())
+    )
+    want_clusters = ddp.dup_clusters(want_pairs, all_ids=corpus.select("doc_id"))
+    assert sorted(map(tuple, out["dup_clusters"].collect())) == sorted(
+        map(tuple, want_clusters.collect())
+    )
+    want_keepers = select_keepers(_doc_features(corpus), want_clusters, 0.0)
+    cols = ["doc_id", "cluster", "toks", "lang_guess", "quality", "fp"]
+    assert sorted(map(tuple, out["keepers"].select(*cols).collect())) == sorted(
+        map(tuple, want_keepers.select(*cols).collect())
+    )
+
+
+def test_dup_clusters_driver_path_is_a_local_relation(spark, sf_dir):
+    """The driver-side union-find fetches edges through Arrow and builds
+    its (id, cluster) table from Arrow: a LocalTableScan, no
+    ExistingRDD (a list of Rows would need Python workers to convert)."""
+    from hexspark import dedup as ddp
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    pairs = ddp.simhash_pairs(docs, max_hamming=3, bits=32)
+    assert pairs.count() > 0
+    for all_ids in (None, docs.select("doc_id")):
+        out = ddp.dup_clusters(pairs, all_ids=all_ids)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_corpus_pipeline_passage_removal(spark, sf_dir, tmp_path):
     """remove_shared_passages=True adds checkpointed passages /
     passage_stats / cleaned_docs stages: planted shared passages are

@@ -34,6 +34,78 @@ def test_minhash_lsh_recall(spark, docs):
         assert recall >= 0.8, f"recall {recall} over {len(truth)} true pairs"
 
 
+def _simhash_reference(docs, bits):
+    """The retired JVM form of ``dedup.simhash``: explode the tokens,
+    one conditional sum per bit, then one ``when`` add per bit.  Kept
+    here only as the reference the Arrow kernel must equal."""
+    toks = docs.select(
+        F.col("doc_id").alias("id"),
+        F.explode(
+            F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+", " "), " ")
+        ).alias("tok"),
+    )
+    toks = toks.withColumn("h", dd._h64(F.col("tok")))
+    if bits > 60:
+        toks = toks.withColumn("h2", dd._h64b(F.col("tok")))
+    aggs = [
+        F.sum(
+            F.when(
+                F.shiftrightunsigned(
+                    F.col("h" if j < 60 else "h2"), j if j < 60 else j - 60
+                ).bitwiseAND(F.lit(1)) == 1,
+                1,
+            ).otherwise(-1)
+        ).alias(f"b{j}")
+        for j in range(bits)
+    ]
+    summed = toks.groupBy("id").agg(*aggs)
+    sig = F.lit(0).cast("long")
+    for j in range(bits):
+        bit_val = (1 << j) if j < 63 else -(1 << 63)
+        sig = sig + F.when(F.col(f"b{j}") > 0, F.lit(bit_val).cast("long")).otherwise(0)
+    return summed.select("id", sig.alias("simhash"))
+
+
+_HOSTILE_TEXTS = [
+    None, "", " ", "   ", "\t", "\r\n", " \t\r\n\f\x0b ",
+    "\tleading tab", "trailing tab\t", "  spaced  out  ", "mixed\t\r\nruns \t here",
+    "a\r\n\r\nb", "MiXeD CaSe Words", "ΣΑΣ", "İstanbul İ", "emoji 🙂 ok 🙂",
+    "naïve café Ünïcödé", "x", "the the the the the", "\x0bvt\x0cff\x0b",
+]
+
+
+@pytest.mark.parametrize("bits", [1, 32, 60, 61, 64])
+def test_simhash_kernel_equals_reference(spark, docs, bits, monkeypatch):
+    """The Arrow kernel equals the retired explode + per-bit-sum form
+    bit for bit: hostile texts (NULL, empty, whitespace-only, tab and
+    CRLF runs, case, non-ASCII) plus the sf docs, at every width edge,
+    and on a 13-way repartitioned input with many doc slices per batch
+    and a token cache that keeps starting over."""
+    hostile = spark.createDataFrame(
+        [(1_000_000 + i, t) for i, t in enumerate(_HOSTILE_TEXTS)],
+        "doc_id: long, text: string",
+    )
+    corpus = docs.select("doc_id", "text").unionByName(hostile)
+    want = {tuple(r) for r in _simhash_reference(corpus, bits).collect()}
+    got = {tuple(r) for r in dd.simhash(corpus, bits=bits).collect()}
+    assert got == want
+    monkeypatch.setattr(dd, "_SIMHASH_SLICE", 7)
+    monkeypatch.setattr(dd, "_SIMHASH_CACHE", 5)
+    got13 = {tuple(r) for r in dd.simhash(corpus.repartition(13), bits=bits).collect()}
+    assert got13 == want
+    # NULL text emits no row; "" is one empty token and does emit one
+    ids = {r[0] for r in got}
+    assert 1_000_000 not in ids and 1_000_001 in ids
+    if bits == 64:
+        assert any(s < 0 for _, s in got)  # bit 63 packs as the sign bit
+
+
+@pytest.mark.parametrize("bits", [0, 65])
+def test_simhash_bits_out_of_range(docs, bits):
+    with pytest.raises(ValueError, match="bits must be in 1..64"):
+        dd.simhash(docs, bits=bits)
+
+
 def test_simhash_deterministic_and_similarity(spark, docs):
     a = {r["id"]: r["simhash"] for r in dd.simhash(docs, bits=32).collect()}
     b = {
