@@ -9,6 +9,19 @@ Pages are amplified deterministically from the documents table
 (``BENCH_COPIES``, default 4000) so sf0.1 exercises 20M pages.  Run
 ``python bench_scaling.py`` for the N-vs-4N cores scaling evidence
 (BENCH/BASELINE.md).
+
+Every bench leaf is built once, in :func:`run`'s leaf table.  Two env
+vars isolate a leaf or capture its plan:
+
+    BENCH_ONLY=q28,q33 BENCH_ROUNDS=3 python bench.py
+    BENCH_ONLY=q1_region_assign BENCH_EXPLAIN_DIR=plans/x python bench.py
+
+``BENCH_ONLY`` is a comma list of leaf-name prefixes that end at an
+underscore (``q1`` selects ``q1_region_assign``, not ``q10_…``); the
+set-up leaves ``materialize_pages`` and ``build_region_map`` always
+run.  ``BENCH_EXPLAIN_DIR`` writes each selected leaf's
+``explain("formatted")`` plan to ``<dir>/<name>.txt`` instead of timing
+it (``run`` leaves, which execute a whole pipeline, have no one plan).
 """
 
 from __future__ import annotations
@@ -29,6 +42,7 @@ from hexspark import join as jx  # noqa: E402
 from hexspark import synth  # noqa: E402
 from hexspark.dedup import dedup_exact  # noqa: E402
 from hexspark.embed import ann_topk_brute  # noqa: E402
+from hexspark.geo import grid_encode  # noqa: E402
 from hexspark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -40,6 +54,8 @@ COPIES = int(os.environ.get("BENCH_COPIES", "4000"))  # 5000 docs * 4000 = 20M p
 # steady-state execution instead of first-compile codegen/JIT noise —
 # q10/q11-class expression-heavy queries vary ~2x on the cold round.
 ROUNDS = int(os.environ.get("BENCH_ROUNDS", "2"))
+ONLY = os.environ.get("BENCH_ONLY", "")
+EXPLAIN_DIR = os.environ.get("BENCH_EXPLAIN_DIR", "")
 
 
 def _sf_from_dir(d: str) -> float:
@@ -49,13 +65,84 @@ def _sf_from_dir(d: str) -> float:
         return -1.0
 
 
-def run(spark) -> tuple[dict, dict]:
+def spine(docs, n_docs: int, copies: int, parts: int):
+    """Page-key spine: ``n_docs * copies`` pages over ``parts`` range
+    partitions, each with its document's ``lang``.  Shuffle-free: a
+    partitioned range plus a broadcast-joined doc dimension."""
+    return (
+        docs.sparkSession.range(0, n_docs * copies, 1, parts)
+        .select(F.col("id").alias("page_key"), (F.col("id") % n_docs).alias("doc_id"))
+        .join(F.broadcast(docs.select("doc_id", "lang")), on="doc_id")
+        .drop("doc_id")
+    )
+
+
+def geotag(raw):
+    """Spine pages with deterministic ``lat``/``lon`` and their res-12
+    ``cell`` — the probe side of the flagship join."""
+    lat, lon = synth.latlon_from_key(F.col("page_key"))
+    return (
+        raw.withColumn("lat", lat).withColumn("lon", lon)
+        .withColumn("cell", grid_encode(F.col("lat"), F.col("lon"), 12))
+    )
+
+
+# how a leaf's builder output is consumed inside the timer; a ``run``
+# builder executes its whole workload itself
+_ACTIONS = {
+    "count": lambda df: df.count(),
+    "collect": lambda df: df.collect(),
+    "run": lambda out: out,
+}
+
+
+def _selected(name: str, only: str) -> bool:
+    want = [p for p in only.split(",") if p]
+    return not want or any(name == p or name.startswith(p + "_") for p in want)
+
+
+def _write_plan(df, explain_dir: str, name: str) -> str:
+    jvm = df.sparkSession._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    path = os.path.join(explain_dir, f"{name}.txt")
+    with open(path, "w") as fh:
+        fh.write(df._jdf.queryExecution().explainString(mode))
+    return path
+
+
+def run(
+    spark, sf_dir: str, copies: int, parts: int, rounds: int,
+    only: str = "", explain_dir: str = "",
+) -> tuple[dict, dict]:
+    """Time every bench leaf at ``sf_dir``: pages are the documents ×
+    ``copies`` over ``parts`` range partitions, and each leaf keeps its
+    best of ``rounds``.  ``only`` and ``explain_dir`` take BENCH_ONLY and
+    BENCH_EXPLAIN_DIR values.  Returns (leaf timings, extras)."""
+    import shutil
+    import tempfile
+
+    import numpy as np
+
+    from hexspark import cachepool
+    from hexspark import skew as hx_skew
+    from hexspark import text as hx_text
+    from hexspark.embed import ann_topk_lsh, embedding_dups, semantic_dedup
+    from hexspark.geo import distance_join, grid_encode_np, knn_rings, polyfill_hier
+    from hexspark.ops import hotspot_tiles, smooth_tiles
+    from hexspark.pipeline import run_corpus_pipeline
+    from hexspark.sample import cap_per_tile, group_quantile_filter, pack_sequences
+    from hexspark.streaming import event_window_stats
+    from hexspark.temporal import asof_join, retention_cohorts, rolling_stats
+    from hexspark.text import (
+        char_entropy, contaminated_docs_fuzzy, importance_weights,
+        linear_classifier_score, quality_score, shared_passages,
+        synth_clf_weights, unigram_surprisal,
+    )
+
     timings: dict[str, float] = {}
     extras: dict = {}
 
-    def timed(name, fn, rounds: int = ROUNDS):
-        from hexspark import cachepool
-
+    def timed(name, fn, rounds: int = rounds):
         best = None
         result = None
         for _ in range(max(1, rounds)):
@@ -79,24 +166,14 @@ def run(spark) -> tuple[dict, dict]:
         timings[name] = round(best, 3)
         return result
 
-    # persist only raw keys: the q1 timing covers the FULL north-metric
-    # path (geotag -> encode -> containment join -> agg)
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    # ---- set-up: every leaf's inputs.  Only the two materializations
+    # are timed, each single-round (a second round would time the cache
+    # hit).  Persist only raw keys: q1 times the FULL north-metric path
+    # (geotag -> encode -> containment join -> agg).
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_docs = docs.count()
-    dim = docs.select("doc_id", "lang")
-    # shuffle-free parallel synthesis: partitioned range spine +
-    # broadcast-joined doc attributes
-    raw = (
-        spark.range(0, n_docs * COPIES, 1, int(CPUS) * 2)
-        .select(F.col("id").alias("page_key"), (F.col("id") % n_docs).alias("doc_id"))
-        .join(F.broadcast(dim), on="doc_id")
-        .drop("doc_id")
-        .persist()
-    )
-    # single-round: these time the materialization of persisted
-    # relations — a second round would measure the cache hit
-    n_pages = timed("materialize_pages", lambda: raw.count(), rounds=1)
-    extras["n_pages"] = n_pages
+    raw = spine(docs, n_docs, copies, parts).persist()
+    extras["n_pages"] = timed("materialize_pages", lambda: raw.count(), rounds=1)
 
     # time the WHOLE region-map build (polyfill + driver-side
     # EqCompactor build run eagerly inside region_map, not just the
@@ -107,36 +184,10 @@ def run(spark) -> tuple[dict, dict]:
         return r
 
     regions = timed("build_region_map", _build_map, rounds=1)
+    pages = geotag(raw)
 
-    def geotagged():
-        lat, lon = synth.latlon_from_key(F.col("page_key"))
-        from hexspark.geo import grid_encode
-
-        return (
-            raw.withColumn("lat", lat).withColumn("lon", lon)
-            .withColumn("cell", grid_encode(F.col("lat"), F.col("lon"), 12))
-        )
-
-    pages = geotagged()
-
-    # q1: flagship spatial join — pages/sec headline (best-of-rounds
-    # like every query; each round re-plans the full geotag→encode→
-    # join→agg pipeline over the persisted raw keys)
-    counts = timed(
-        "q1_region_assign", lambda: ops.region_counts(pages, regions).collect()
-    )
-    extras["pages_per_sec"] = round(n_pages / timings["q1_region_assign"], 1)
-    extras["region_counts"] = {r["region"]: r["n_pages"] for r in counts}
-
-    # q3: tile rollup at res 6
-    timed("q3_tile_rollup", lambda: ops.tile_region_rollup(pages, regions, 6).collect())
-
-    # q4: build+compact a large synthetic set from lineitem keys
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    cells = li.select(synth.cell_from_key(F.col("l_partkey"), 8).alias("cell"))
-    timed("q4_build_compact", lambda: bx.build_region(cells, compactor="set").count())
-
-    # q5: subtree aggregation over the compacted set
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li_cells = li.select(synth.cell_from_key(F.col("l_partkey"), 8).alias("cell"))
     region8 = bx.build_region(
         li.select(
             synth.cell_from_key(F.col("l_partkey"), 8).alias("cell"),
@@ -144,51 +195,19 @@ def run(spark) -> tuple[dict, dict]:
         ),
         value_col="qty", compactor="none", dedupe_policy="sum",
     )
-    probes = (
-        spark.read.parquet(f"{SF_DIR}/supplier.parquet")
+    subtree_probes = (
+        spark.read.parquet(f"{sf_dir}/supplier.parquet")
         .select(
             cx.to_parent(synth.cell_from_key(F.col("s_suppkey"), 8), 2).alias("probe")
         ).distinct()
     )
-    timed(
-        "q5_subtree_sum",
-        lambda: jx.subtree_agg(region8, probes, [F.sum("qty").alias("s")], probe_col="probe").collect(),
-    )
-
-    # q6: exact dedup over documents (reuses the setup docs relation)
-    timed("q6_dedup_exact", lambda: dedup_exact(docs).count())
-
-    # q7: ANN brute top-k over embeddings
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    timed("q7_ann_topk", lambda: ann_topk_brute(emb, q, 10).count())
+    tiles_src = pages.withColumn("tile", cx.to_parent("cell", 2))
 
-    # q8: skewed tile rollup, plain vs salted two-phase agg
-    from hexspark import cells as hx_cells
-    from hexspark import skew as hx_skew
-
-    tiles_src = pages.withColumn("tile", hx_cells.to_parent("cell", 2))
-    timed(
-        "q8_tile_agg_plain",
-        lambda: tiles_src.groupBy("tile").agg(F.count("*").alias("n")).count(),
-    )
-    timed(
-        "q8_tile_agg_salted",
-        lambda: hx_skew.salted_agg(
-            tiles_src, "tile", 16,
-            [F.count("*").alias("c")],
-            [F.sum("c").alias("n")],
-        ).count(),
-    )
-
-    # q9: ring-metric kNN, probe table (Spark-side ring generation)
-    import numpy as np
-
-    from hexspark.geo import grid_encode, grid_encode_np, knn_rings
-
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet")
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     clat, clon = synth.latlon_from_key(F.col("c_custkey"))
     stored = (
         cust.select(clat.alias("lat"), clon.alias("lon"))
@@ -197,84 +216,31 @@ def run(spark) -> tuple[dict, dict]:
     )
     pk = np.arange(20, dtype=np.int64) * 977
     plat, plon = (pk % 140) - 70.0, (pk % 320) - 160.0
-    probes = spark.createDataFrame(
+    ring_probes = spark.createDataFrame(
         [(int(c),) for c in np.unique(grid_encode_np(plat.astype(float), plon.astype(float), 5))],
         "probe: long",
     )
-    timed(
-        "q9_knn_rings",
-        lambda: knn_rings(stored, probes, k=5, max_ring=60, res=5).count(),
-    )
-
-    # q10: hierarchical polyfill, country-scale at res 7
-    from hexspark.geo import polyfill_hier
-
     poly = [(30.0, -10.0), (45.0, -5.0), (44.0, 15.0), (32.0, 12.0)]
-    timed("q10_polyfill_hier", lambda: polyfill_hier(spark, poly, 7).count())
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
 
-    # q11: embedding near-dup mining, LSH-pruned scale path
-    from hexspark.embed import embedding_dups
-
-    timed(
-        "q11_embed_dups_lsh",
-        lambda: embedding_dups(emb, 0.3, dim=64, n_planes=8, n_tables=4).count(),
+    # bench pages lack a url column (raw spine keeps only key+lang) —
+    # derive the deterministic url the pages source would emit
+    pages_url = pages.withColumn(
+        "url",
+        F.concat(
+            F.lit("https://s"), (F.col("page_key") % 97).cast("string"),
+            F.lit(".example.org/doc/"), F.col("page_key").cast("string"),
+        ),
     )
-
-    # q12: hyperplane-LSH ANN (bucketed equi-join + two-phase top-k)
-    from hexspark.embed import ann_topk_lsh
-
-    timed(
-        "q12_ann_lsh",
-        lambda: ann_topk_lsh(emb, q, 10, dim=64, n_planes=8, n_tables=4).count(),
-    )
-
-    # q13: tumbling-window event rollup (partial+final hash agg)
-    from hexspark.streaming import event_window_stats
-
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    timed("q13_event_windows", lambda: event_window_stats(events).count())
-
-    # q14: zoom pyramid — all tile levels 0..6 from ONE pages shuffle,
-    # coarser levels rolled up from children's tile counts
-    timed("q14_tile_pyramid", lambda: ops.tile_pyramid(pages, 6).count())
-
-    # q16: spatial × web-curation composite — top domains per region
-    # (URL regex-parse before the broadcast containment join, one
-    # map-side-combinable (region, domain) count, two-phase top-k)
-    def _top_domains():
-        # bench pages lack a url column (raw spine keeps only key+lang)
-        # — derive the deterministic url the pages source would emit
-        with_url = pages.withColumn(
-            "url",
-            F.concat(
-                F.lit("https://s"), (F.col("page_key") % 97).cast("string"),
-                F.lit(".example.org/doc/"), F.col("page_key").cast("string"),
-            ),
-        )
-        return ops.top_domains_per_region(with_url, regions, k=5).count()
-
-    timed("q16_top_domains", _top_domains)
-
-    # q17: token-budget sequence packing over the full pages spine —
-    # the window runs per Lehmer shard (shards = 4× cores, so every
-    # core sorts ~n_pages/128 rows; no global-order reducer exists).
-    # The groupBy(shard).max(seq_id) sink forces the window (a bare
-    # count() could let the optimizer drop the unused Window node).
-    from hexspark.sample import pack_sequences
 
     def _pack():
+        # shards = 4× cores (parts is 2× cores), so every core sorts
+        # ~n_pages/128 rows; no global-order reducer exists.  The
+        # groupBy(shard).max(seq_id) sink forces the window (a bare
+        # count() could let the optimizer drop the unused Window node).
         toks = F.col("page_key") % 997 + 1
-        out = pack_sequences(
-            pages, "page_key", toks, budget=2048, shards=int(CPUS) * 4
-        )
-        return out.groupBy("shard").agg(F.max("seq_id").alias("mx")).count()
-
-    timed("q17_pack_sequences", _pack)
-
-    # q18: PII count+redact regex chain over a synthetic short text per
-    # page — measures the native-regex codegen path at corpus row count
-    # (the op every privacy scrub runs on every document).
-    from hexspark import text as hx_text
+        out = pack_sequences(pages, "page_key", toks, budget=2048, shards=2 * parts)
+        return out.groupBy("shard").agg(F.max("seq_id").alias("mx"))
 
     def _pii():
         txt = F.concat(
@@ -288,13 +254,7 @@ def run(spark) -> tuple[dict, dict]:
         red, ne, ni, nph = hx_text.pii_scrub_with_counts(txt)
         return pages.select(
             (ne + ni + nph).alias("n"), F.length(red).alias("l")
-        ).agg(F.sum("n"), F.sum("l")).collect()
-
-    timed("q18_pii_scrub", _pii)
-
-    # q19: radius distance join — bounded probe set against the full
-    # pages table (grid-stencil broadcast; pages never shuffle)
-    from hexspark.geo import distance_join
+        ).agg(F.sum("n"), F.sum("l"))
 
     def _distance_join():
         probes = pages.filter(F.col("page_key") % 199 == 0).select(
@@ -304,145 +264,156 @@ def run(spark) -> tuple[dict, dict]:
         return distance_join(
             probes, pages, 0.5, probe_key="probe_id", point_key="page_key",
             probe_cols=("plat", "plon"), point_cols=("lat", "lon"),
-        ).count()
-
-    timed("q19_distance_join", _distance_join)
-
-    # q20/q21: temporal operators over the events table — one exchange
-    # + per-key sort each (asof union-window / rolling range frame)
-    from hexspark.temporal import asof_join, rolling_stats
+        )
 
     def _asof():
         probes = events.filter(F.col("event_type") == "purchase").select(
             "event_id", "user_id", "ts"
         )
         build = events.filter(F.col("event_type") == "click")
-        return asof_join(probes, build, tolerance="'6' HOUR").count()
+        return asof_join(probes, build, tolerance="'6' HOUR")
 
-    timed("q20_asof_join", _asof)
-    timed("q21_rolling_stats", lambda: rolling_stats(events).count())
-
-    # q22/q23: document scorers (explode → combinable aggs; classifier
-    # adds the broadcast weight join)
-    from hexspark.text import (
-        linear_classifier_score, synth_clf_weights, unigram_surprisal,
-    )
-
-    timed("q22_surprisal", lambda: unigram_surprisal(docs).count())
     clf_w = synth_clf_weights(spark)
-    timed(
-        "q23_classifier",
-        lambda: linear_classifier_score(docs, clf_w).count(),
-    )
-
-    # q24/q25: the k-ring raster family — tile-scale scatter/gather on
-    # top of one pages-scale rollup
-    from hexspark.ops import hotspot_tiles, smooth_tiles
 
     def _tiles():
         return pages.groupBy(
             cx.to_parent("cell", 4).alias("tile")
         ).agg(F.count("*").alias("n_pages"))
 
-    timed("q24_tile_smooth", lambda: smooth_tiles(_tiles(), 2, 4).count())
-    timed("q25_tile_hotspot", lambda: hotspot_tiles(_tiles(), 2, 4).count())
-
-    # q26: retention matrix (one events-scale distinct)
-    from hexspark.temporal import retention_cohorts
-
-    timed("q26_retention", lambda: retention_cohorts(events).count())
-
-    # q27: DSIR importance weights (pooled explode, bucket-bounded LMs)
-    from hexspark.text import importance_weights
-
     def _dsir():
         target = docs.filter(F.col("doc_id") % 10 == 0)
-        return importance_weights(docs, target).count()
-
-    timed("q27_importance", _dsir)
-
-    # q28: exact shared-passage mining (inverted-index gram join)
-    from hexspark.text import shared_passages
-
-    timed(
-        "q28_shared_passages",
-        lambda: shared_passages(docs, n=8, min_len=16).count(),
-    )
-
-    # q29: semantic dedup over embeddings (within-centroid cosine)
-    from hexspark.embed import semantic_dedup
-
-    timed(
-        "q29_semantic_dedup",
-        lambda: semantic_dedup(emb, 0.35, n_centroids=8, quantizer="first_k")
-        .filter(~F.col("kept")).count(),
-    )
-
-    # q30: spatial density cap — pages-scale two-phase top-k on tile
-    from hexspark.sample import cap_per_tile
-
-    timed(
-        "q30_cap_per_tile",
-        lambda: cap_per_tile(pages, k=3, tile_res=4).count(),
-    )
-
-    # q31/q32/q33: document scorers/gates (char entropy is the
-    # zero-shuffle projection; quantile gate one agg + join-back;
-    # fuzzy decontamination a broadcast shingle join)
-    from hexspark.sample import group_quantile_filter
-    from hexspark.text import (
-        char_entropy, contaminated_docs_fuzzy, quality_score,
-    )
-
-    timed("q31_char_entropy", lambda: char_entropy(docs).count())
-    timed(
-        "q32_quantile_filter",
-        lambda: group_quantile_filter(
-            docs, quality_score(F.col("text")), 5000, "source"
-        ).count(),
-    )
+        return importance_weights(docs, target)
 
     def _fuzzy():
         ev = docs.filter(F.col("doc_id") % 50 == 0)
-        return contaminated_docs_fuzzy(docs, ev, 40).count()
+        return contaminated_docs_fuzzy(docs, ev, 40)
 
-    timed("q33_decontam_fuzzy", _fuzzy)
-
-    # q34/q35: hierarchical distinct rollup — distinct docs per tile at
-    # every zoom level 0..2.  Exact form pays ONE pages-scale distinct
-    # (20M (tile, doc) pairs — irreducible: the answer depends on the
-    # exact pair set) then reduces sets level-by-level; the HLL form is
-    # the 10^12-scale path (map-side-combinable sketch agg, sketches
-    # merge up the pyramid — measured ~3.8x the exact form here).
     pages_docs = pages.withColumn("doc_id", F.col("page_key") % F.lit(n_docs))
-    timed(
-        "q34_pyramid_distinct",
-        lambda: ops.pyramid_unique_docs(pages_docs, 2).count(),
-    )
-    timed(
-        "q35_pyramid_distinct_hll",
-        lambda: ops.pyramid_unique_docs_approx(pages_docs, 2, lg_k=10).count(),
-    )
-
-    # q15: the corpus-curation pipeline END TO END (features → simhash
-    # pairs → clusters → keepers → stats) INCLUDING its checkpoint
-    # Parquet writes — the dedup family's pinned wall number is the
-    # pipeline a user actually runs, not just per-operator timings.
-    # Fresh work dir each invocation so resume never hides compute.
-    import shutil
-    import tempfile
-
-    from hexspark.pipeline import run_corpus_pipeline
 
     def _corpus_pipeline():
+        # fresh work dir each invocation so resume never hides compute
         wd = tempfile.mkdtemp(prefix="hexbench_corpus_")
         try:
-            out = run_corpus_pipeline(spark, SF_DIR, wd)
+            out = run_corpus_pipeline(spark, sf_dir, wd)
             return out["corpus_stats"].count()
         finally:
             shutil.rmtree(wd, ignore_errors=True)
 
-    timed("q15_corpus_pipeline", _corpus_pipeline, rounds=1)
+    # ---- the leaf table: (name, builder, action, rounds).  Each round
+    # calls the builder again, so every round plans a fresh Dataset.
+    leaves = [
+        # flagship spatial join — pages/sec headline; each round re-plans
+        # the full geotag→encode→join→agg pipeline over the raw keys
+        ("q1_region_assign", lambda: ops.region_counts(pages, regions), "collect", rounds),
+        ("q3_tile_rollup", lambda: ops.tile_region_rollup(pages, regions, 6), "collect", rounds),
+        # build+compact a large synthetic set from lineitem keys
+        ("q4_build_compact", lambda: bx.build_region(li_cells, compactor="set"), "count", rounds),
+        # subtree aggregation over the compacted set
+        ("q5_subtree_sum", lambda: jx.subtree_agg(
+            region8, subtree_probes, [F.sum("qty").alias("s")], probe_col="probe"
+        ), "collect", rounds),
+        ("q6_dedup_exact", lambda: dedup_exact(docs), "count", rounds),
+        ("q7_ann_topk", lambda: ann_topk_brute(emb, q, 10), "count", rounds),
+        # skewed tile rollup, plain vs salted two-phase agg
+        ("q8_tile_agg_plain",
+         lambda: tiles_src.groupBy("tile").agg(F.count("*").alias("n")), "count", rounds),
+        ("q8_tile_agg_salted", lambda: hx_skew.salted_agg(
+            tiles_src, "tile", 16, [F.count("*").alias("c")], [F.sum("c").alias("n")],
+        ), "count", rounds),
+        # ring-metric kNN, probe table (Spark-side ring generation)
+        ("q9_knn_rings",
+         lambda: knn_rings(stored, ring_probes, k=5, max_ring=60, res=5), "count", rounds),
+        # hierarchical polyfill, country-scale at res 7
+        ("q10_polyfill_hier", lambda: polyfill_hier(spark, poly, 7), "count", rounds),
+        # embedding near-dup mining, LSH-pruned scale path
+        ("q11_embed_dups_lsh",
+         lambda: embedding_dups(emb, 0.3, dim=64, n_planes=8, n_tables=4), "count", rounds),
+        # hyperplane-LSH ANN (bucketed equi-join + two-phase top-k)
+        ("q12_ann_lsh",
+         lambda: ann_topk_lsh(emb, q, 10, dim=64, n_planes=8, n_tables=4), "count", rounds),
+        # tumbling-window event rollup (partial+final hash agg)
+        ("q13_event_windows", lambda: event_window_stats(events), "count", rounds),
+        # zoom pyramid — all tile levels 0..6 from ONE pages shuffle,
+        # coarser levels rolled up from children's tile counts
+        ("q14_tile_pyramid", lambda: ops.tile_pyramid(pages, 6), "count", rounds),
+        # spatial × web-curation composite — top domains per region (URL
+        # regex-parse before the broadcast containment join, one
+        # map-side-combinable (region, domain) count, two-phase top-k)
+        ("q16_top_domains",
+         lambda: ops.top_domains_per_region(pages_url, regions, k=5), "count", rounds),
+        # token-budget sequence packing over the full pages spine, the
+        # window per Lehmer shard
+        ("q17_pack_sequences", _pack, "count", rounds),
+        # PII count+redact regex chain over a synthetic short text per
+        # page — the native-regex codegen path at corpus row count
+        ("q18_pii_scrub", _pii, "collect", rounds),
+        # radius distance join — bounded probe set against the full
+        # pages table (grid-stencil broadcast; pages never shuffle)
+        ("q19_distance_join", _distance_join, "count", rounds),
+        # temporal operators over the events table — one exchange + per-
+        # key sort each (asof union-window / rolling range frame)
+        ("q20_asof_join", _asof, "count", rounds),
+        ("q21_rolling_stats", lambda: rolling_stats(events), "count", rounds),
+        # document scorers (explode → combinable aggs; the classifier
+        # adds the broadcast weight join)
+        ("q22_surprisal", lambda: unigram_surprisal(docs), "count", rounds),
+        ("q23_classifier", lambda: linear_classifier_score(docs, clf_w), "count", rounds),
+        # the k-ring raster family — tile-scale scatter/gather on top of
+        # one pages-scale rollup
+        ("q24_tile_smooth", lambda: smooth_tiles(_tiles(), 2, 4), "count", rounds),
+        ("q25_tile_hotspot", lambda: hotspot_tiles(_tiles(), 2, 4), "count", rounds),
+        # retention matrix (one events-scale distinct)
+        ("q26_retention", lambda: retention_cohorts(events), "count", rounds),
+        # DSIR importance weights (pooled explode, bucket-bounded LMs)
+        ("q27_importance", _dsir, "count", rounds),
+        # exact shared-passage mining (inverted-index gram join)
+        ("q28_shared_passages",
+         lambda: shared_passages(docs, n=8, min_len=16), "count", rounds),
+        # semantic dedup over embeddings (within-centroid cosine)
+        ("q29_semantic_dedup", lambda: semantic_dedup(
+            emb, 0.35, n_centroids=8, quantizer="first_k"
+        ).filter(~F.col("kept")), "count", rounds),
+        # spatial density cap — pages-scale two-phase top-k on tile
+        ("q30_cap_per_tile", lambda: cap_per_tile(pages, k=3, tile_res=4), "count", rounds),
+        # document scorers/gates (char entropy is the zero-shuffle
+        # projection; quantile gate one agg + join-back; fuzzy
+        # decontamination a broadcast shingle join)
+        ("q31_char_entropy", lambda: char_entropy(docs), "count", rounds),
+        ("q32_quantile_filter", lambda: group_quantile_filter(
+            docs, quality_score(F.col("text")), 5000, "source"
+        ), "count", rounds),
+        ("q33_decontam_fuzzy", _fuzzy, "count", rounds),
+        # hierarchical distinct rollup — distinct docs per tile at every
+        # zoom level 0..2.  Exact form pays ONE pages-scale distinct (20M
+        # (tile, doc) pairs — irreducible: the answer depends on the
+        # exact pair set) then reduces sets level-by-level; the HLL form
+        # is the 10^12-scale path (map-side-combinable sketch agg,
+        # sketches merge up the pyramid — measured ~3.8x the exact form).
+        ("q34_pyramid_distinct",
+         lambda: ops.pyramid_unique_docs(pages_docs, 2), "count", rounds),
+        ("q35_pyramid_distinct_hll",
+         lambda: ops.pyramid_unique_docs_approx(pages_docs, 2, lg_k=10), "count", rounds),
+        # the corpus-curation pipeline END TO END (features → simhash
+        # pairs → clusters → keepers → stats) INCLUDING its checkpoint
+        # Parquet writes — the dedup family's pinned wall number is the
+        # pipeline a user actually runs, not just per-operator timings
+        ("q15_corpus_pipeline", _corpus_pipeline, "run", 1),
+    ]
+
+    if explain_dir:
+        os.makedirs(explain_dir, exist_ok=True)
+    for name, build, action, n in leaves:
+        if not _selected(name, only):
+            continue
+        if explain_dir:
+            if action != "run":
+                extras.setdefault("plans", []).append(
+                    _write_plan(build(), explain_dir, name))
+            continue
+        out = timed(name, lambda: _ACTIONS[action](build()), n)
+        if name == "q1_region_assign":
+            extras["pages_per_sec"] = round(extras["n_pages"] / timings[name], 1)
+            extras["region_counts"] = {r["region"]: r["n_pages"] for r in out}
 
     raw.unpersist()
     regions.unpersist()
@@ -514,7 +485,9 @@ def main() -> None:
                       shuffle_partitions=max(int(CPUS), 8))
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        timings, extras = run(spark)
+        timings, extras = run(
+            spark, SF_DIR, COPIES, int(CPUS) * 2, ROUNDS, ONLY, EXPLAIN_DIR
+        )
     finally:
         spark.stop()
     total = round(sum(v for k, v in timings.items() if k.startswith("q")), 3)

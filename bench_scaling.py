@@ -19,6 +19,10 @@ import subprocess
 import sys
 import time
 
+from bench import _cpu_jiffies, geotag, spine, steal_pct_between
+from hexspark import ops
+from hexspark.session import get_spark
+
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # 160000 copies × 5000 sf0.1 docs = 800M pages: the timed job must run
@@ -30,84 +34,67 @@ N_SMALL = int(os.environ.get("BENCH_N", "8"))
 N_BIG = int(os.environ.get("BENCH_4N", "32"))
 ROUNDS = int(os.environ.get("BENCH_ROUNDS", "4"))
 
-WORKER = r"""
-import json, os, sys, time
-sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
-from hexspark import ops, synth
-from hexspark.geo import grid_encode
-from hexspark.session import get_spark
 
-spec = sys.argv[1]
-if "x" in spec:
-    # real multi-executor mode: SEPARATE executor JVMs via
-    # local-cluster[n_exec, cores_per, mem] — the in-sandbox
-    # realization of the north rule's "N and 4N executors"
-    n_exec, cores_per = (int(v) for v in spec.split("x"))
-    cores = n_exec * cores_per
-    spark = get_spark(
-        "scaling", master=f"local-cluster[{{n_exec}},{{cores_per}},8192]",
-        shuffle_partitions=max(cores, 8),
-    )
-else:
-    cores = int(spec)
-    # throughput-collector GC + a large heap: at 32 cores the default G1/8g
-    # setup loses ~12% to GC of short-lived UnsafeRow allocations; the
-    # 8-core leg is unaffected (measured), so this purely helps scaling
-    spark = get_spark(
-        "scaling", master=f"local[{{cores}}]", shuffle_partitions=max(cores, 8),
-        extra_conf={{"spark.driver.memory": "32g",
-                     "spark.driver.extraJavaOptions": "-XX:+UseParallelGC"}},
-    )
-spark.sparkContext.setLogLevel("ERROR")
+def flagship_query(docs, n_docs: int, regions, copies: int, parts: int):
+    """The timed job: the full north-metric pipeline from storage —
+    parquet scan -> page synthesis -> geotag -> cell-encode ->
+    containment join -> agg, built from bench.py's spine and geotag.
+    No caching: every call is a fresh Dataset, so each round re-reads
+    and recomputes with no AQE shuffle-stage reuse or plan-object
+    memoization."""
+    return ops.region_counts(geotag(spine(docs, n_docs, copies, parts)), regions)
 
-# The timed job is the full north-metric pipeline from storage:
-# parquet scan -> page synthesis -> geotag -> cell-encode ->
-# containment join -> agg.  No caching: every round re-reads and
-# recomputes (fresh Dataset per round, so no AQE shuffle-stage reuse
-# and no plan-object memoization); at {copies}x amplification the
-# distributed execution dwarfs the fixed driver-side planning cost.
-docs = spark.read.parquet({sf_dir!r} + "/documents.parquet")
-regions = ops.region_map(spark).persist()
-regions.count()
 
-n_docs = docs.count()
-dim = docs.select("doc_id", "lang")
-
-def build_query():
-    # shuffle-free parallel page synthesis: a partitioned range is the
-    # page-key spine; doc attributes attach via broadcast hash join
-    # cores*8 tasks: a fine task grain smooths the end-of-stage straggler
-    # tail, which otherwise idles more cores in the big config and
-    # depresses measured scaling
-    raw = (
-        spark.range(0, n_docs * {copies}, 1, cores * 8)
-        .select(
-            F.col("id").alias("page_key"),
-            (F.col("id") % n_docs).alias("doc_id"),
+def worker(spec: str) -> None:
+    """One leg in its own JVM: ``spec`` is a thread count ("8" =
+    local[8]) or "NxC" (N executor JVMs × C cores).  Prints one JSON
+    line with the best of ROUNDS timed rounds after a warm-up."""
+    if "x" in spec:
+        # real multi-executor mode: SEPARATE executor JVMs via
+        # local-cluster[n_exec, cores_per, mem] — the in-sandbox
+        # realization of the north rule's "N and 4N executors"
+        n_exec, cores_per = (int(v) for v in spec.split("x"))
+        cores = n_exec * cores_per
+        spark = get_spark(
+            "scaling", master=f"local-cluster[{n_exec},{cores_per},8192]",
+            shuffle_partitions=max(cores, 8),
         )
-        .join(F.broadcast(dim), on="doc_id")
-        .drop("doc_id")
-    )
-    lat, lon = synth.latlon_from_key(F.col("page_key"))
-    pages = (
-        raw.withColumn("lat", lat).withColumn("lon", lon)
-        .withColumn("cell", grid_encode(F.col("lat"), F.col("lon"), 12))
-    )
-    return ops.region_counts(pages, regions)
+    else:
+        cores = int(spec)
+        # throughput-collector GC + a large heap: at 32 cores the default
+        # G1/8g setup loses ~12% to GC of short-lived UnsafeRow
+        # allocations; the 8-core leg is unaffected (measured), so this
+        # purely helps scaling
+        spark = get_spark(
+            "scaling", master=f"local[{cores}]", shuffle_partitions=max(cores, 8),
+            extra_conf={"spark.driver.memory": "32g",
+                        "spark.driver.extraJavaOptions": "-XX:+UseParallelGC"},
+        )
+    spark.sparkContext.setLogLevel("ERROR")
 
-n = n_docs * {copies}
-build_query().collect()  # warm-up: codegen cache, JIT, python workers
-best = None
-for _ in range({rounds}):
-    t0 = time.perf_counter()
-    build_query().collect()  # fresh plan: no stage reuse
-    dt = time.perf_counter() - t0
-    best = dt if best is None or dt < best else best
-print(json.dumps({{"cores": cores, "n_pages": n, "sec": best,
-                   "pages_per_sec": n / best}}))
-spark.stop()
-"""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    regions = ops.region_map(spark).persist()
+    regions.count()
+    n_docs = docs.count()
+
+    # cores*8 tasks: a fine task grain smooths the end-of-stage
+    # straggler tail, which otherwise idles more cores in the big
+    # config and depresses measured scaling; at COPIES amplification
+    # the distributed execution dwarfs the fixed driver-side planning
+    def build():
+        return flagship_query(docs, n_docs, regions, COPIES, cores * 8)
+
+    n = n_docs * COPIES
+    build().collect()  # warm-up: codegen cache, JIT, python workers
+    best = None
+    for _ in range(ROUNDS):
+        t0 = time.perf_counter()
+        build().collect()
+        dt = time.perf_counter() - t0
+        best = dt if best is None or dt < best else best
+    print(json.dumps({"cores": cores, "n_pages": n, "sec": best,
+                      "pages_per_sec": n / best}))
+    spark.stop()
 
 
 def _burn(_):
@@ -142,13 +129,11 @@ def measure(spec) -> dict:
     # sample hypervisor steal across the leg: loadavg cannot see it
     # (CLAUDE.md — 7-14% bursts on otherwise-idle runs), and a stolen
     # leg silently flips the efficiency number
-    from bench import _cpu_jiffies, steal_pct_between
-
     j0 = _cpu_jiffies()
-    script = WORKER.format(repo=REPO, sf_dir=SF_DIR, copies=COPIES, rounds=ROUNDS)
     out = subprocess.run(
-        [sys.executable, "-c", script, str(spec)],
-        capture_output=True, text=True, timeout=3600,
+        [sys.executable, "-c",
+         f"import bench_scaling; bench_scaling.worker({str(spec)!r})"],
+        cwd=REPO, capture_output=True, text=True, timeout=3600,
     )
     if out.returncode != 0:
         raise RuntimeError(out.stderr[-4000:])

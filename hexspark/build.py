@@ -38,6 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import cells as cx
 from . import cells_np as cnp
@@ -406,7 +407,7 @@ def build_region_local(
     dedupe_policy: str = "min",
 ) -> DataFrame:
     """Driver-side build of a broadcast-scale Spark input: one collect
-    into :func:`build_region_np`, one ``createDataFrame`` — not 3-4 tiny
+    into :func:`build_region_np`, one :func:`local_frame` — not 3-4 tiny
     distributed stages (equivalence with :func:`build_region` is tested
     on the US915/Monaco fixtures)."""
     cols = [cell_col] + ([value_col] if value_col else [])
@@ -415,7 +416,19 @@ def build_region_local(
     # every >2^53 cell value, not just the null row
     pdf = df.filter(F.col(cell_col).isNotNull()).select(*cols).toPandas()
     out = build_region_np(pdf, cell_col, value_col, compactor, dedupe_policy)
-    return df.sparkSession.createDataFrame(out, schema=df.select(*cols).schema)
+    return local_frame(df.sparkSession, out, df.select(*cols).schema)
+
+
+def local_frame(spark, pdf: pd.DataFrame, schema: StructType) -> DataFrame:
+    """A driver-built pandas frame as a Spark input, through Arrow: one
+    ``LocalTableScan`` and no Python workers, empty frames included.
+    ``createDataFrame`` of an EMPTY pandas frame takes PySpark's
+    Python-list path instead, which plans a ``Scan ExistingRDD``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pandas(pdf, schema=to_arrow_schema(schema), preserve_index=False)
+    return spark.createDataFrame(table, schema)
 
 
 def upsert(

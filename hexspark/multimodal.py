@@ -176,11 +176,6 @@ def _decode_stub_batch(payloads: list, dim: int) -> np.ndarray:
     return (2.0 * u - 1.0).astype(np.float32)
 
 
-def _decode_stub(payload: bytes, dim: int) -> np.ndarray:
-    """Single-payload convenience wrapper over the batch kernel."""
-    return _decode_stub_batch([payload], dim)[0]
-
-
 def extract_features(
     media: DataFrame, dim: int = 16, codec: "str | None" = "auto"
 ) -> DataFrame:

@@ -13,6 +13,7 @@ from functools import reduce
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from . import build as bx
 from . import cells as cx
@@ -35,7 +36,10 @@ REGIONS: dict[str, list[tuple[float, float]]] = {
 REGION_RES = 4
 
 
-_REGION_SCHEMA = "cell bigint, region string not null"
+_REGION_SCHEMA = StructType([
+    StructField("cell", LongType()),
+    StructField("region", StringType(), False),
+])
 
 
 def region_map(spark: SparkSession, res: int = REGION_RES, compact: bool = True) -> DataFrame:
@@ -50,7 +54,8 @@ def region_map(spark: SparkSession, res: int = REGION_RES, compact: bool = True)
 def _build_regions(spark: SparkSession, polygons, res: int, compact: bool) -> DataFrame:
     """Region map of ``(name, exterior, holes)`` polygons, built on the
     driver since it is broadcast-scale metadata: numpy polyfill per
-    polygon, :func:`build.build_region_np`, one ``createDataFrame``.  A
+    polygon, :func:`build.build_region_np`, one Arrow-built
+    :func:`build.local_frame` (empty maps included).  A
     polygon past ``polyfill_np``'s ``flat_budget`` takes the distributed
     polyfill, and the map then builds through ``build_region_local``."""
     fills, spill = [], []
@@ -67,8 +72,8 @@ def _build_regions(spark: SparkSession, polygons, res: int, compact: bool) -> Da
         if not spill:
             if compact:
                 pdf = bx.build_region_np(pdf, value_col="region", compactor="eq")
-            return spark.createDataFrame(pdf, _REGION_SCHEMA)
-        spill.append(spark.createDataFrame(pdf, _REGION_SCHEMA))
+            return bx.local_frame(spark, pdf, _REGION_SCHEMA)
+        spill.append(bx.local_frame(spark, pdf, _REGION_SCHEMA))
     df = reduce(DataFrame.unionByName, spill)
     return bx.build_region_local(df, value_col="region", compactor="eq") if compact else df
 

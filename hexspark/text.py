@@ -342,19 +342,14 @@ _PII_NEEDLES = {EMAIL_RE: "@", IPV4_RE: ".", PHONE_RE: "+"}
 def pii_counts(text: Column) -> "tuple[Column, Column, Column]":
     """(n_emails, n_ipv4, n_phones) — native regex counts, codegen-
     resident over the full corpus scan (needle-gated, see
-    ``_PII_NEEDLES``)."""
+    ``_PII_NEEDLES``).  NULL text counts 0 for every pattern, not
+    NULL: the needle gate's ``otherwise(0)`` catches it, so a SQL twin
+    must ``COALESCE`` its counts to 0."""
     return tuple(
         F.when(
             text.contains(F.lit(_PII_NEEDLES[pat])),
             F.size(F.regexp_extract_all(text, F.lit(pat), 0)).cast("long"),
         ).otherwise(F.lit(0).cast("long"))
-        for pat, _ in _PII_CHAIN
-    )
-
-
-def dd_pii_counts(text: str) -> "tuple[str, str, str]":
-    return tuple(
-        f"CAST(len(regexp_extract_all({text}, '{pat}')) AS BIGINT)"
         for pat, _ in _PII_CHAIN
     )
 

@@ -1,9 +1,10 @@
 #!/usr/bin/env bash
-# Fast pre-ship gate (~5 min): import sanity, driver-contract smoke,
+# Fast pre-ship gate (~7 min): import sanity, driver-contract smoke,
 # region-map equivalence (the map feeds 7 oracle-gated queries), the
 # simhash kernel and corpus pipeline (they feed 5: simhash,
 # simhash_pairs, simhash_pairs64, incremental_keepers, dup_clusters),
-# oracle parity. Full suite: python -m pytest tests/ -q (~8.5 min).
+# the bench leaf table (names, BENCH_ONLY/BENCH_EXPLAIN_DIR), oracle
+# parity. Full suite: python -m pytest tests/ -q (~8.5 min).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 python - <<'PY'
@@ -11,9 +12,12 @@ import __spark_entry__ as e
 qs, osql = e.queries(), e.oracle_sql()
 missing = sorted(set(qs) - set(osql))
 assert not missing, f"queries without oracles: {missing}"
+orphans = sorted(set(osql) - set(qs))
+assert not orphans, f"oracles without queries: {orphans}"
 print(f"contract ok: {len(qs)} queries, {len(osql)} oracles")
 PY
 python -m pytest tests/test_geo.py -q -k region
 python -m pytest tests/test_text_dedup.py -q -k simhash
 python -m pytest tests/test_pipeline.py -q -k corpus
+python -m pytest tests/test_bench_registry.py -q
 python -m pytest tests/test_oracle_parity.py -q

@@ -578,6 +578,34 @@ def test_regions_from_geojson(spark, tmp_path):
         regions_from_geojson(spark, {"type": "Feature"}, res=4)
 
 
+def test_empty_region_map_is_a_local_relation(spark):
+    """A polygon too small to hold a res-3 cell centroid fills 0 cells:
+    the map is empty, keeps the region schema, and is an Arrow-built
+    LocalTableScan — not the Python-list ``Scan ExistingRDD`` an empty
+    pandas frame would plan."""
+    from hexspark.geo import polyfill_np
+    from hexspark.ops import _REGION_SCHEMA, regions_from_geojson
+
+    tri = [(10.0, 20.0), (10.0, 20.01), (10.01, 20.0)]
+    assert len(polyfill_np(tri, 3)) == 0
+    gj = {
+        "type": "FeatureCollection",
+        "features": [{
+            "type": "Feature",
+            "properties": {"name": "speck"},
+            "geometry": {
+                "type": "Polygon",
+                "coordinates": [[[lon, lat] for lat, lon in tri + tri[:1]]],
+            },
+        }],
+    }
+    df = regions_from_geojson(spark, gj, res=3)
+    assert df.schema == _REGION_SCHEMA
+    assert df.count() == 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_polyfill_holes(spark):
     """Donut fill: exterior minus interior ring, ContainsCentroid on
     both.  Cells whose centroid falls inside the hole are excluded,

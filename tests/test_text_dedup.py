@@ -741,6 +741,15 @@ def test_pii_scrub_with_counts_matches_direct(spark):
         assert (r["a"], r["b"], r["c"]) == (r["da"], r["db"], r["dc"]), r
 
 
+def test_pii_counts_null_text_counts_zero(spark):
+    """NULL text counts 0 per pattern, not NULL (pii_counts' contract)."""
+    from hexspark.text import pii_counts
+
+    df = spark.createDataFrame([(None,)], "text string")
+    row = df.select(*pii_counts(F.col("text"))).first()
+    assert tuple(row) == (0, 0, 0)
+
+
 def test_remove_boilerplate_lines_hand_computed(spark):
     """Order preservation, intra-doc duplicate keeping, all-removed
     doc emitting '' (collect_list-skips-NULL path), and frequent

@@ -100,13 +100,22 @@ def _shuffle_bytes_during(spark, action):
     import time
 
     store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsList().length()
+
+    def execution_ids():
+        execs = store.executionsList()
+        return [execs.apply(i).executionId() for i in range(execs.length())]
+
+    # select by id, not list position: once a long session passes
+    # spark.sql.ui.retainedExecutions the list length stops growing
+    before = max(execution_ids(), default=-1)
     action()
     time.sleep(0.5)  # status store updates are async
     execs = store.executionsList()
     total = 0.0
-    for idx in range(before, execs.length()):
+    for idx in range(execs.length()):
         e = execs.apply(idx)
+        if e.executionId() <= before:
+            continue
         mvals = store.executionMetrics(e.executionId())
         ms = e.metrics()
         for i in range(ms.length()):
