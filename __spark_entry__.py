@@ -1006,14 +1006,12 @@ POLYFILL_HIER_RES = 5
 
 
 def q_polyfill_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical coarse-to-fine polyfill vs the DuckDB flat
-    centroid-enumeration oracle (forced through several refinement
-    levels with a small coarse budget)."""
-    from hexspark.geo import polyfill_hier
+    """Coarse-to-fine polyfill (a driver-side cover refined from res 0,
+    expanded to res in Spark) vs the DuckDB flat centroid-enumeration
+    oracle."""
+    from hexspark.geo import polyfill
 
-    return polyfill_hier(
-        spark, ops.REGIONS["alpha"], POLYFILL_HIER_RES, coarse_budget=128
-    )
+    return polyfill(spark, ops.REGIONS["alpha"], POLYFILL_HIER_RES)
 
 
 RESIZE_W, RESIZE_H = 64, 32

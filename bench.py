@@ -127,7 +127,7 @@ def run(
     from hexspark import skew as hx_skew
     from hexspark import text as hx_text
     from hexspark.embed import ann_topk_lsh, embedding_dups, semantic_dedup
-    from hexspark.geo import distance_join, grid_encode_np, knn_rings, polyfill_hier
+    from hexspark.geo import distance_join, grid_encode_np, knn_rings, polyfill
     from hexspark.ops import hotspot_tiles, smooth_tiles
     from hexspark.pipeline import run_corpus_pipeline
     from hexspark.sample import cap_per_tile, group_quantile_filter, pack_sequences
@@ -146,7 +146,7 @@ def run(
         best = None
         result = None
         for _ in range(max(1, rounds)):
-            # operators with internal persists (polyfill rects, LSH
+            # operators with internal persists (kNN ring rounds, LSH
             # signatures) build identical plans per round; without this
             # the repeat hits the prior round's CacheManager entry and
             # measures a cache lookup, not the operator
@@ -323,8 +323,9 @@ def run(
         # ring-metric kNN, probe table (Spark-side ring generation)
         ("q9_knn_rings",
          lambda: knn_rings(stored, ring_probes, k=5, max_ring=60, res=5), "count", rounds),
-        # hierarchical polyfill, country-scale at res 7
-        ("q10_polyfill_hier", lambda: polyfill_hier(spark, poly, 7), "count", rounds),
+        # coarse-to-fine polyfill, country-scale at res 7: driver-side
+        # cover, distributed expansion to res
+        ("q10_polyfill_hier", lambda: polyfill(spark, poly, 7), "count", rounds),
         # embedding near-dup mining, LSH-pruned scale path
         ("q11_embed_dups_lsh",
          lambda: embedding_dups(emb, 0.3, dim=64, n_planes=8, n_tables=4), "count", rounds),

@@ -399,26 +399,6 @@ def build_region_np(
     return pd.DataFrame({cell_col: out_c})
 
 
-def build_region_local(
-    df: DataFrame,
-    cell_col: str = "cell",
-    value_col: Optional[str] = None,
-    compactor: str = "set",
-    dedupe_policy: str = "min",
-) -> DataFrame:
-    """Driver-side build of a broadcast-scale Spark input: one collect
-    into :func:`build_region_np`, one :func:`local_frame` — not 3-4 tiny
-    distributed stages (equivalence with :func:`build_region` is tested
-    on the US915/Monaco fixtures)."""
-    cols = [cell_col] + ([value_col] if value_col else [])
-    # drop NULL cells Spark-side (the validate_cells quarantine rule):
-    # a NULL would decay toPandas' long column to float64, corrupting
-    # every >2^53 cell value, not just the null row
-    pdf = df.filter(F.col(cell_col).isNotNull()).select(*cols).toPandas()
-    out = build_region_np(pdf, cell_col, value_col, compactor, dedupe_policy)
-    return local_frame(df.sparkSession, out, df.select(*cols).schema)
-
-
 def local_frame(spark, pdf: pd.DataFrame, schema: StructType) -> DataFrame:
     """A driver-built pandas frame as a Spark input, through Arrow: one
     ``LocalTableScan`` and no Python workers, empty frames included.
@@ -565,10 +545,8 @@ def uncompact_df(
     is at res ``r``.
 
     ``min_res``: the coarsest resolution present in ``df`` (when the
-    caller knows it) — skips building explode stages for levels below
-    it.  Iterative refiners (hexspark.geo.polyfill_hier) call this
-    once per level; without the bound the stacked plans grow
-    O(res²) explode stages."""
+    caller knows it, as :func:`hexspark.geo.polyfill` does for its
+    cover) — skips building explode stages for levels below it."""
     out = df
     for r in range(min_res, res):
         child_shift = (K.MAX_RES - (r + 1)) * K.DIGIT_BITS
@@ -590,3 +568,16 @@ def uncompact_df(
             cell_col, F.when(F.col("__d") >= 0, child).otherwise(F.col(cell_col))
         ).drop("__d")
     return out.filter(cx.res(cell_col) == res)
+
+
+def uncompact_np(cells: np.ndarray, res: int) -> np.ndarray:
+    """numpy twin of :func:`uncompact_df` (same child bit math): every
+    cell expanded to its descendants at ``res``, finer cells dropped."""
+    cells = np.asarray(cells, dtype=np.int64)
+    for r in range(int(cnp.res(cells).min(initial=res)), res):
+        here = cnp.res(cells) == r
+        bumped = (cells[here] & ~np.int64(K.RES_MASK)) | np.int64((r + 1) << K.RES_OFFSET)
+        shift = (K.MAX_RES - (r + 1)) * K.DIGIT_BITS
+        kids = bumped[:, None] - ((7 - np.arange(7, dtype=np.int64)) << shift)
+        cells = np.concatenate([cells[~here], kids.ravel()])
+    return cells[cnp.res(cells) == res]

@@ -1,6 +1,6 @@
 """Bounded lifetime for operator-internal ``persist()`` barriers.
 
-Operators like ``geo.polyfill_hier``, ``dedup.lsh_candidates`` and
+Operators like ``geo.knn_rings``, ``dedup.lsh_candidates`` and
 ``embed.embedding_dups`` persist intermediate relations as plan
 barriers / compute-once nodes.  Those caches must outlive the function
 (the caller materializes the returned lazy DataFrame later), so they
@@ -68,7 +68,7 @@ class CachePool:
 def clear_all(blocking: bool = False) -> None:
     """Release every operator pool's cached blocks.  Benchmarks call
     this between timed rounds so a repeat of an operator whose internal
-    persist plan is identical (polyfill rects, LSH signatures) measures
+    persist plan is identical (kNN ring rounds, LSH signatures) measures
     real recomputation, not a CacheManager hit from the prior round."""
     for p in list(_ALL_POOLS):
         p.clear(blocking=blocking)

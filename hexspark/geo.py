@@ -24,11 +24,14 @@ import math
 from typing import Optional, Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from . import cells as cx
 from . import constants as K
+from .cachepool import CachePool
 
 try:  # pragma: no cover - not available in this sandbox
     import h3 as _h3  # noqa: F401
@@ -161,14 +164,10 @@ def point_in_polygon_np(
     return inside
 
 
-def pip_sql_predicate(
-    lat: str, lon: str, polygon: Sequence[tuple[float, float]], flit=repr
-) -> str:
-    """SQL twin of :func:`point_in_polygon_np` — an odd/even sum of
-    edge-crossing indicators, one term per edge.  ``flit`` formats the
-    float literals: default ``repr`` (DuckDB parses bare decimals as
-    DOUBLE); pass :func:`_spark_flit` for Spark SQL, whose bare
-    decimals are DECIMAL and would change arithmetic."""
+def pip_sql_predicate(lat: str, lon: str, polygon: Sequence[tuple[float, float]]) -> str:
+    """DuckDB-SQL twin of :func:`point_in_polygon_np` — an odd/even sum
+    of edge-crossing indicators, one term per edge (bare decimal
+    literals parse as DOUBLE in DuckDB)."""
     n = len(polygon)
     terms = []
     for i in range(n):
@@ -176,79 +175,10 @@ def pip_sql_predicate(
         y2, x2 = polygon[(i + 1) % n]
         if y1 == y2:
             continue  # horizontal edge never crosses
-        xint = (
-            f"(({flit(x2)} - {flit(x1)}) * (({lat}) - {flit(y1)})"
-            f" / ({flit(y2)} - {flit(y1)}) + {flit(x1)})"
-        )
-        cross = (
-            f"((({flit(y1)} > ({lat})) <> ({flit(y2)} > ({lat})))"
-            f" AND (({lon}) < {xint}))"
-        )
+        xint = f"(({x2!r} - {x1!r}) * (({lat}) - {y1!r}) / ({y2!r} - {y1!r}) + {x1!r})"
+        cross = f"((({y1!r} > ({lat})) <> ({y2!r} > ({lat}))) AND (({lon}) < {xint}))"
         terms.append(f"(CASE WHEN {cross} THEN 1 ELSE 0 END)")
     return f"((({' + '.join(terms)}) % 2) = 1)"
-
-
-def _spark_flit(v: float) -> str:
-    """Spark-SQL double literal (``1.5D``) — bare ``1.5`` is DECIMAL."""
-    return f"{float(v)!r}D"
-
-
-def _segment_intersects_rect_sql(
-    x1: float, y1: float, x2: float, y2: float,
-    xmin: str, xmax: str, ymin: str, ymax: str,
-    flit=_spark_flit,
-) -> str:
-    """SQL-string twin of :func:`_segment_intersects_rect` (same
-    Liang-Barsky terms, sign branches resolved in Python)."""
-    dx, dy = x2 - x1, y2 - y1
-    enters = ["0.0D" if flit is _spark_flit else "0.0"]
-    exits = ["1.0D" if flit is _spark_flit else "1.0"]
-    par = []
-    if dx == 0:
-        par.append(f"(({flit(x1)} >= {xmin}) AND ({flit(x1)} <= {xmax}))")
-    else:
-        t1 = f"(({xmin} - {flit(x1)}) / {flit(dx)})"
-        t2 = f"(({xmax} - {flit(x1)}) / {flit(dx)})"
-        if dx < 0:
-            t1, t2 = t2, t1
-        enters.append(t1)
-        exits.append(t2)
-    if dy == 0:
-        par.append(f"(({flit(y1)} >= {ymin}) AND ({flit(y1)} <= {ymax}))")
-    else:
-        t1 = f"(({ymin} - {flit(y1)}) / {flit(dy)})"
-        t2 = f"(({ymax} - {flit(y1)}) / {flit(dy)})"
-        if dy < 0:
-            t1, t2 = t2, t1
-        enters.append(t1)
-        exits.append(t2)
-    hit = (
-        f"(GREATEST({', '.join(enters)}) <= LEAST({', '.join(exits)}))"
-        if len(enters) > 1
-        else "TRUE"
-    )
-    for c in par:
-        hit = f"({hit} AND {c})"
-    return hit
-
-
-def _polygon_crosses_rect_sql(
-    polygon: Sequence[tuple[float, float]],
-    xmin: str, xmax: str, ymin: str, ymax: str,
-    flit=_spark_flit,
-) -> str:
-    """SQL-string twin of :func:`_polygon_crosses_rect`."""
-    n = len(polygon)
-    parts = []
-    for i in range(n):
-        y1, x1 = polygon[i]
-        y2, x2 = polygon[(i + 1) % n]
-        parts.append(
-            _segment_intersects_rect_sql(
-                x1, y1, x2, y2, xmin, xmax, ymin, ymax, flit
-            )
-        )
-    return "(" + " OR ".join(parts) + ")"
 
 
 def pip_column(lat: Column, lon: Column, polygon: Sequence[tuple[float, float]]) -> Column:
@@ -269,10 +199,9 @@ def pip_column(lat: Column, lon: Column, polygon: Sequence[tuple[float, float]])
 def polyfill_grid(
     polygon: Sequence[tuple[float, float]], res: int
 ) -> tuple[float, float, float, float, int, int]:
-    """Centroid-lattice derivation shared by :func:`polyfill`, the
-    hierarchical variant's coarse start, and the DuckDB oracle twin
-    (hexspark.oracles.dd_polyfill_cte) — ONE source of truth for grid
-    pitch, bbox snap, and extent, so the two engines cannot drift.
+    """The flat centroid lattice over the polygon's bounding box, as
+    the DuckDB oracle enumerates it (hexspark.oracles.dd_polyfill_cte):
+    grid pitch, bbox snapped to the global lattice, and extent.
     Returns (px, py, lat0, lon0, nx, ny)."""
     lats = [p[0] for p in polygon]
     lons = [p[1] for p in polygon]
@@ -286,274 +215,145 @@ def polyfill_grid(
     return px, py, lat0, lon0, nx, ny
 
 
+def _edges_cross_rects(
+    rings: Sequence[Sequence[tuple[float, float]]],
+    xmin: np.ndarray, xmax: np.ndarray, ymin: np.ndarray, ymax: np.ndarray,
+) -> np.ndarray:
+    """Per rectangle: does any ring edge touch it?  Liang-Barsky per
+    edge (the edge is a constant, so its sign branches resolve in
+    Python); rectangles are closed and an edge lying wholly inside one
+    touches it."""
+    hit = np.zeros(len(xmin), dtype=bool)
+    for ring in rings:
+        n = len(ring)
+        for k in range(n):
+            y1, x1 = ring[k]
+            y2, x2 = ring[(k + 1) % n]
+            dx, dy = x2 - x1, y2 - y1
+            enter = np.zeros(len(xmin))
+            exit_ = np.ones(len(xmin))
+            ok = np.ones(len(xmin), dtype=bool)
+            for p, d, lo, hi in ((x1, dx, xmin, xmax), (y1, dy, ymin, ymax)):
+                if d == 0:
+                    ok &= (p >= lo) & (p <= hi)
+                    continue
+                t1, t2 = (lo - p) / d, (hi - p) / d
+                if d < 0:
+                    t1, t2 = t2, t1
+                enter = np.maximum(enter, t1)
+                exit_ = np.minimum(exit_, t2)
+            hit |= ok & (enter <= exit_)
+    return hit
+
+
+def _polyfill_cover(
+    polygon: Sequence[tuple[float, float]],
+    res: int,
+    holes: "Sequence[Sequence[tuple[float, float]]] | None" = None,
+) -> np.ndarray:
+    """Coarse-to-fine ContainsCentroid cover: disjoint cells of
+    resolution ≤ ``res`` whose descendants at ``res`` are exactly the
+    cells whose centroid lies inside ``polygon`` and outside every hole
+    (the flat lattice enumeration, cell-for-cell — tested).  Its size
+    scales with the boundary, not the area.
+
+    From the res-0 cells overlapping the bbox, each level sorts every
+    candidate rectangle by its 4 corners and by whether any ring edge
+    touches it: all corners in and no edge → emitted whole; no corner
+    in and no edge → dropped; otherwise refined to its 7 children.  At
+    ``res`` the remaining boundary cells take the centroid test."""
+    rings = [polygon, *(holes or ())]
+
+    def inside(lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+        keep = point_in_polygon_np(lat, lon, polygon)
+        for hole in holes or ():
+            keep &= ~point_in_polygon_np(lat, lon, hole)
+        return keep
+
+    lats = [p[0] for p in polygon]
+    lons = [p[1] for p in polygon]
+
+    def span(lo: float, hi: float, pitch: float) -> np.ndarray:
+        first, last = (
+            min(max(int(math.floor(v / pitch)), 0), GRID_DIM - 1) for v in (lo, hi)
+        )
+        return np.arange(first, last + 1, dtype=np.int64)
+
+    j, i = (a.ravel() for a in np.meshgrid(
+        span(min(lats) + 90.0, max(lats) + 90.0, 180.0 / GRID_DIM),
+        span(min(lons) + 180.0, max(lons) + 180.0, 360.0 / GRID_DIM),
+        indexing="ij",
+    ))
+    cover = []
+    digits = np.arange(7, dtype=np.int64)
+    for r in range(res + 1):
+        xl, yl = _axis_levels(r)
+        px = 360.0 / (GRID_DIM * 7**xl)
+        py = 180.0 / (GRID_DIM * 7**yl)
+        xmin = -180.0 + i * px
+        ymin = -90.0 + j * py
+        if r == res:
+            keep = inside(ymin + py / 2.0, xmin + px / 2.0)
+            cover.append(ij_to_cell_np(i[keep], j[keep], r))
+            break
+        xmax, ymax = xmin + px, ymin + py
+        n = len(i)
+        corners = inside(
+            np.concatenate([ymin, ymin, ymax, ymax]),
+            np.concatenate([xmin, xmax, xmin, xmax]),
+        ).reshape(4, n).sum(axis=0)
+        crossed = _edges_cross_rects(rings, xmin, xmax, ymin, ymax)
+        whole = (corners == 4) & ~crossed
+        cover.append(ij_to_cell_np(i[whole], j[whole], r))
+        refine = ~whole & ((corners > 0) | crossed)
+        i, j = i[refine], j[refine]
+        # children at r+1: odd levels refine x (7i + d), even levels y
+        if (r + 1) % 2:
+            i, j = (7 * i[:, None] + digits).ravel(), np.repeat(j, 7)
+        else:
+            i, j = np.repeat(i, 7), (7 * j[:, None] + digits).ravel()
+    return np.concatenate(cover)
+
+
+_CELL_SCHEMA = StructType([StructField("cell", LongType())])
+
+
 def polyfill(
     spark,
     polygon: Sequence[tuple[float, float]],
     res: int,
-    flat_budget: int = 65536,
     holes: "Sequence[Sequence[tuple[float, float]]] | None" = None,
 ) -> DataFrame:
     """Vector→raster: all res-``res`` grid cells whose centroid lies in
     the polygon (the reference tests use ContainsCentroid polyfill via
-    h3o, /root/reference/src/iteration.rs:349-371 — which also honors
-    interior rings, matched here by ``holes``).
+    h3o, the reference's src/iteration.rs:349-371 — which also honors
+    interior rings, matched here by ``holes``: a cell whose centroid
+    lies inside a hole is left out).
 
-    Strategy: enumerate candidate cell centers over the polygon's
-    bounding box at the res-``res`` grid pitch *as a DataFrame range*
-    (distributed, no driver materialization), PIP-filter, encode.
-    When the bbox enumeration would exceed ``flat_budget`` candidates
-    (fine res over a large polygon), dispatch to the coarse-to-fine
-    :func:`polyfill_hier`, whose cost is bounded by boundary length
-    instead of area — same output set (tested).
+    The driver computes only the boundary-scale :func:`_polyfill_cover`
+    and hands it to Spark as one Arrow-built ``LocalTableScan``; the
+    expansion to ``res`` (:func:`build.uncompact_df`) runs distributed.
+    Building the DataFrame launches no Spark job."""
+    from . import build as bx
+    from . import cells_np as cnp
 
-    ``holes``: interior rings (same (lat, lon) vertex convention).  The
-    fill is exterior-fill minus each hole's own ContainsCentroid fill —
-    exact at the cell level because :func:`polyfill_grid` snaps every
-    bbox to the same global lattice, so a centroid inside a hole
-    encodes to the identical cell id in both fills.  Boundary cells
-    follow the same crossing-rule tie-break as the exterior ring."""
-    lats = [p[0] for p in polygon]
-    lons = [p[1] for p in polygon]
-    px, py, lat0, lon0, nx, ny = polyfill_grid(polygon, res)
-    if ((max(lats) - min(lats)) / py + 2) * ((max(lons) - min(lons)) / px + 2) > flat_budget:
-        ext = polyfill_hier(spark, polygon, res)
-    else:
-        grid = (
-            spark.range(ny * nx)
-            .select(
-                (F.lit(lat0) + (F.floor(F.col("id") / nx) + 0.5) * py).alias("lat"),
-                (F.lit(lon0) + (F.col("id") % nx + 0.5) * px).alias("lon"),
-            )
-        )
-        ext = (
-            grid.filter(pip_column(F.col("lat"), F.col("lon"), polygon))
-            .select(grid_encode(F.col("lat"), F.col("lon"), res).alias("cell"))
-            .distinct()
-        )
-    for hole in holes or ():
-        # holes are boundary-scale relative to the exterior: anti-join
-        # them out (AQE broadcasts the small side on its own estimate)
-        ext = ext.join(
-            polyfill(spark, hole, res, flat_budget), "cell", "left_anti"
-        )
-    return ext
+    cover = _polyfill_cover(polygon, res, holes)
+    cells = bx.local_frame(spark, pd.DataFrame({"cell": cover}), _CELL_SCHEMA)
+    return bx.uncompact_df(cells, res, min_res=int(cnp.res(cover).min(initial=res)))
 
 
 def polyfill_np(
     polygon: "Sequence[tuple[float, float]]",
     res: int,
-    flat_budget: int = 4_000_000,
     holes: "Sequence[Sequence[tuple[float, float]]] | None" = None,
 ) -> "np.ndarray":
-    """Driver-side numpy :func:`polyfill` (same ContainsCentroid rule,
-    same :func:`polyfill_grid` lattice — identical output, tested):
-    enumerate bbox centers, vectorized PIP, encode.  For broadcast-
-    scale polygon collections (a GeoJSON region file) this turns
-    one-Spark-job-per-polygon into microseconds per polygon; callers
-    must keep it off corpus-scale paths.  Raises when the bbox
-    enumeration exceeds ``flat_budget`` candidates — fall back to the
-    distributed :func:`polyfill` for continent-at-fine-res shapes.
-
-    ``holes``: interior rings — exterior fill minus each hole's fill
-    (exact at the cell level; the shared global lattice makes the two
-    fills encode identical cell ids — see :func:`polyfill`)."""
-    px, py, lat0, lon0, nx, ny = polyfill_grid(polygon, res)
-    if nx * ny > flat_budget:
-        raise ValueError(
-            f"polyfill_np: {nx * ny} candidate centers exceed "
-            f"flat_budget={flat_budget}; use the distributed polyfill"
-        )
-    ii = np.arange(nx * ny, dtype=np.int64)
-    lat = lat0 + (ii // nx + 0.5) * py
-    lon = lon0 + (ii % nx + 0.5) * px
-    keep = point_in_polygon_np(lat, lon, polygon)
-    cells = np.unique(grid_encode_np(lat[keep], lon[keep], res))
-    for hole in holes or ():
-        cells = np.setdiff1d(
-            cells, polyfill_np(hole, res, flat_budget), assume_unique=True
-        )
-    return cells
-
-
-def _segment_intersects_rect(
-    x1: float, y1: float, x2: float, y2: float,
-    xmin: Column, xmax: Column, ymin: Column, ymax: Column,
-) -> Column:
-    """Liang-Barsky: does the literal segment (x1,y1)→(x2,y2) intersect
-    the per-row axis-aligned rectangle?  The segment endpoints are plan
-    literals (polygon edges), so the sign branches resolve in Python
-    and the Column expression is pure min/max/compare arithmetic.
-    Segments fully inside the rectangle intersect (clip non-empty)."""
-    dx, dy = x2 - x1, y2 - y1
-    enters = [F.lit(0.0)]
-    exits = [F.lit(1.0)]
-    parallel_ok = []
-    if dx == 0:
-        parallel_ok.append((F.lit(x1) >= xmin) & (F.lit(x1) <= xmax))
-    else:
-        t1 = (xmin - F.lit(x1)) / F.lit(dx)
-        t2 = (xmax - F.lit(x1)) / F.lit(dx)
-        if dx < 0:
-            t1, t2 = t2, t1
-        enters.append(t1)
-        exits.append(t2)
-    if dy == 0:
-        parallel_ok.append((F.lit(y1) >= ymin) & (F.lit(y1) <= ymax))
-    else:
-        t1 = (ymin - F.lit(y1)) / F.lit(dy)
-        t2 = (ymax - F.lit(y1)) / F.lit(dy)
-        if dy < 0:
-            t1, t2 = t2, t1
-        enters.append(t1)
-        exits.append(t2)
-    hit = F.greatest(*enters) <= F.least(*exits) if len(enters) > 1 else F.lit(True)
-    for c in parallel_ok:
-        hit = hit & c
-    return hit
-
-
-def _polygon_crosses_rect(
-    polygon: Sequence[tuple[float, float]],
-    xmin: Column, xmax: Column, ymin: Column, ymax: Column,
-) -> Column:
-    """OR of edge-rectangle intersections over the polygon's (literal)
-    edges — true iff the polygon boundary touches the rectangle."""
-    hit = F.lit(False)
-    n = len(polygon)
-    for i in range(n):
-        y1, x1 = polygon[i]
-        y2, x2 = polygon[(i + 1) % n]
-        hit = hit | _segment_intersects_rect(x1, y1, x2, y2, xmin, xmax, ymin, ymax)
-    return hit
-
-
-def _cell_rect_df(cur: DataFrame, res: int) -> tuple[DataFrame, float, float]:
-    """Project the cell rectangle's (xmin, ymin) ONCE per level and
-    persist — a plan barrier.  Without it every corner-PIP / edge-
-    crossing reference re-inlines the whole ``cell_to_ij`` subtree
-    (Catalyst's CollapseProject duplicates it ~30×) and the classify
-    step costs ~20s of analysis/codegen per level on 7k rows.  (An
-    eager ``localCheckpoint`` barrier was measured 2× slower end-to-end:
-    per-level jobs pay codegen serially instead of inside one action.)
-
-    The persists are registered with ``_POLYFILL_POOL`` — each
-    polyfill call retires the blocks of two calls ago, so long-running
-    drivers don't accumulate caches for the session lifetime."""
-    xl, yl = _axis_levels(res)
-    px = 360.0 / (GRID_DIM * 7**xl)
-    py = 180.0 / (GRID_DIM * 7**yl)
-    i, j = cell_to_ij(F.col("cell"), res)
-    rect = _POLYFILL_POOL.add(cur.select(
-        "cell",
-        (F.lit(-180.0) + i * px).alias("__xmin"),
-        (F.lit(-90.0) + j * py).alias("__ymin"),
-    ).persist())
-    return rect, px, py
-
-
-from .cachepool import CachePool
-
-_POLYFILL_POOL = CachePool()
-_KNN_RINGS_POOL = CachePool()
-
-
-def polyfill_hier(
-    spark,
-    polygon: Sequence[tuple[float, float]],
-    res: int,
-    coarse_budget: int = 4096,
-) -> DataFrame:
-    """Coarse-to-fine polyfill — identical output to the flat
-    :func:`polyfill` but candidates bounded by *boundary length*, not
-    bbox area: a res-12 continent never enumerates ~10^12 centers.
-
-    Per level: a candidate cell whose rectangle lies fully inside the
-    polygon (all 4 corners inside, no polygon edge intersects — exact,
-    Liang-Barsky over literal edges) is emitted as a whole subtree;
-    fully-outside rectangles prune; only *boundary* cells refine to
-    their 7 children.  At the target res, boundary cells take the
-    ContainsCentroid test.  Inside-subtrees uncompact to ``res`` at the
-    end (the descendants' centroids are inside by rectangle
-    containment, so the set equals the flat enumeration — tested)."""
+    """Driver-side numpy :func:`polyfill`: the same cover, expanded to
+    ``res`` in numpy (sorted int64 cells).  For broadcast-scale polygon
+    collections (a GeoJSON region file); the result grows with the
+    polygon's area, so keep it off corpus-scale paths."""
     from . import build as bx
 
-    _POLYFILL_POOL.new_generation()
-
-    lats = [p[0] for p in polygon]
-    lons = [p[1] for p in polygon]
-    # coarsest start res whose bbox enumeration fits the budget
-    r0 = res
-    for r in range(res + 1):
-        xl, yl = _axis_levels(r)
-        px = 360.0 / (GRID_DIM * 7**xl)
-        py = 180.0 / (GRID_DIM * 7**yl)
-        nx = int(math.ceil((max(lons) - min(lons)) / px)) + 2
-        ny = int(math.ceil((max(lats) - min(lats)) / py)) + 2
-        if nx * ny > coarse_budget:
-            r0 = max(r - 1, 0)
-            break
-    else:
-        r0 = res
-    # bbox candidates at r0 (tiny by construction)
-    xl, yl = _axis_levels(r0)
-    px = 360.0 / (GRID_DIM * 7**xl)
-    py = 180.0 / (GRID_DIM * 7**yl)
-    lat0 = math.floor((min(lats) + 90.0) / py) * py - 90.0
-    lon0 = math.floor((min(lons) + 180.0) / px) * px - 180.0
-    ny = int(math.ceil((max(lats) - lat0) / py)) + 1
-    nx = int(math.ceil((max(lons) - lon0) / px)) + 1
-    cur = (
-        spark.range(ny * nx)
-        .select(
-            (F.lit(lat0) + (F.floor(F.col("id") / nx) + 0.5) * py).alias("lat"),
-            (F.lit(lon0) + (F.col("id") % nx + 0.5) * px).alias("lon"),
-        )
-        .select(grid_encode(F.col("lat"), F.col("lon"), r0).alias("cell"))
-        .distinct()
-    )
-    inside_acc: list[DataFrame] = []
-    for r in range(r0, res):
-        rect, px, py = _cell_rect_df(cur, r)
-        # whole classify step as TWO F.expr SQL strings: building the
-        # 4 corner-PIPs + Liang-Barsky per edge as Column ops costs
-        # thousands of py4j round trips per level (pure driver-side
-        # plan-construction latency); the SQL string parses JVM-side
-        # in one call with identical arithmetic (D-suffixed doubles)
-        xmin, ymin = "(__xmin)", "(__ymin)"
-        xmax = f"((__xmin) + {_spark_flit(px)})"
-        ymax = f"((__ymin) + {_spark_flit(py)})"
-        corners = " + ".join(
-            f"(CASE WHEN {pip_sql_predicate(la, lo, polygon, _spark_flit)}"
-            " THEN 1 ELSE 0 END)"
-            for la, lo in [(ymin, xmin), (ymin, xmax), (ymax, xmin), (ymax, xmax)]
-        )
-        crossed = _polygon_crosses_rect_sql(polygon, xmin, xmax, ymin, ymax)
-        tagged = _POLYFILL_POOL.add(rect.select(
-            "cell",
-            F.expr(f"((({corners}) = 4) AND NOT {crossed})").alias("__in"),
-            F.expr(f"((({corners}) = 0) AND NOT {crossed})").alias("__out"),
-        ).persist())
-        inside_acc.append(tagged.filter(F.col("__in")).select("cell"))
-        boundary = tagged.filter(~F.col("__in") & ~F.col("__out")).select("cell")
-        cur = bx.uncompact_df(boundary, r + 1, min_res=r)
-    # target res: boundary cells take the centroid test
-    rect, px, py = _cell_rect_df(cur, res)
-    centroid_in = F.expr(pip_sql_predicate(
-        f"((__ymin) + {_spark_flit(py / 2.0)})",
-        f"((__xmin) + {_spark_flit(px / 2.0)})",
-        polygon,
-        _spark_flit,
-    ))
-    out = rect.filter(centroid_in).select("cell")
-    if inside_acc:
-        # union the mixed-res inside subtrees and expand them in ONE
-        # uncompact chain (uncompact_df handles mixed resolutions) —
-        # one chain instead of one per level keeps the plan shallow
-        inside = inside_acc[0]
-        for ins in inside_acc[1:]:
-            inside = inside.unionByName(ins)
-        out = out.unionByName(bx.uncompact_df(inside, res, min_res=r0))
-    return out.distinct()
+    return np.sort(bx.uncompact_np(_polyfill_cover(polygon, res, holes), res))
 
 
 # ---------------------------------------------------------------------------
@@ -713,6 +513,9 @@ def ij_to_cell(i: Column, j: Column, res: int) -> Column:
             d = (F.floor(j / F.lit(float(7 ** (yl - yi)))) % 7).cast("long")
         digits = digits + d * F.lit(1 << ((K.MAX_RES - lvl) * K.DIGIT_BITS))
     return cx.make_cell(base, F.lit(res).cast("long"), digits)
+
+
+_KNN_RINGS_POOL = CachePool()
 
 
 def _ring_disk(

@@ -8,8 +8,6 @@ membership, tile rollups, and raster↔vector assignment.
 
 from __future__ import annotations
 
-from functools import reduce
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,7 +17,7 @@ from . import build as bx
 from . import cells as cx
 from . import join as jx
 from .cachepool import CachePool
-from .geo import GRID_DIM, polyfill, polyfill_np
+from .geo import GRID_DIM, polyfill_np
 
 _PYRAMID_POOL = CachePool()
 _NEAREST_POOL = CachePool()
@@ -55,27 +53,17 @@ def _build_regions(spark: SparkSession, polygons, res: int, compact: bool) -> Da
     """Region map of ``(name, exterior, holes)`` polygons, built on the
     driver since it is broadcast-scale metadata: numpy polyfill per
     polygon, :func:`build.build_region_np`, one Arrow-built
-    :func:`build.local_frame` (empty maps included).  A
-    polygon past ``polyfill_np``'s ``flat_budget`` takes the distributed
-    polyfill, and the map then builds through ``build_region_local``."""
-    fills, spill = [], []
-    for name, verts, holes in polygons:
-        try:
-            cells = polyfill_np(verts, res, holes=holes)
-            fills.append(pd.DataFrame({"cell": cells, "region": name}))
-        except ValueError:
-            spill.append(
-                polyfill(spark, verts, res, holes=holes).withColumn("region", F.lit(name))
-            )
-    if fills:
-        pdf = pd.concat(fills, ignore_index=True)
-        if not spill:
-            if compact:
-                pdf = bx.build_region_np(pdf, value_col="region", compactor="eq")
-            return bx.local_frame(spark, pdf, _REGION_SCHEMA)
-        spill.append(bx.local_frame(spark, pdf, _REGION_SCHEMA))
-    df = reduce(DataFrame.unionByName, spill)
-    return bx.build_region_local(df, value_col="region", compactor="eq") if compact else df
+    :func:`build.local_frame` (empty maps included)."""
+    pdf = pd.concat(
+        [
+            pd.DataFrame({"cell": polyfill_np(verts, res, holes=holes), "region": name})
+            for name, verts, holes in polygons
+        ],
+        ignore_index=True,
+    )
+    if compact:
+        pdf = bx.build_region_np(pdf, value_col="region", compactor="eq")
+    return bx.local_frame(spark, pdf, _REGION_SCHEMA)
 
 
 def assign_regions(
@@ -791,7 +779,13 @@ def regions_from_geojson(
             raise ValueError(
                 f"feature {name!r}: unsupported geometry {gtype!r}"
             )
-        polygons += [(str(name), _open(r[0]), [_open(h) for h in r[1:]]) for r in polys]
+        for rings in polys:
+            rings = [_open(r) for r in rings]
+            if not rings or min(map(len, rings)) < 3:
+                raise ValueError(
+                    f"feature {name!r}: a polygon ring has fewer than 3 vertices"
+                )
+            polygons.append((str(name), rings[0], rings[1:]))
     if not polygons:
         raise ValueError("FeatureCollection has no polygon features")
     return _build_regions(spark, polygons, res, compact)

@@ -202,7 +202,7 @@ def test_monaco_compaction_and_promoted_get(spark, monaco):
 
 
 def test_local_build_equals_distributed(spark, us915, monaco):
-    """build_region_local (driver numpy) ≡ build_region (distributed)."""
+    """build_region_np (driver numpy) ≡ build_region (distributed)."""
     for src, kwargs in [
         (us915, dict(compactor="set")),
         (monaco, dict(compactor="set")),
@@ -212,9 +212,11 @@ def test_local_build_equals_distributed(spark, us915, monaco):
         ),
     ]:
         dist = bx.build_region(src, **kwargs)
-        loc = bx.build_region_local(src, **kwargs)
-        assert dist.exceptAll(loc).count() == 0
-        assert loc.exceptAll(dist).count() == 0
+        cols = dist.columns
+        loc = bx.build_region_np(src.select(*cols).toPandas(), **kwargs)
+        assert sorted(map(tuple, dist.collect())) == sorted(
+            loc[cols].itertuples(index=False, name=None)
+        )
 
 
 def test_monaco_map_values_null_compactor(spark, monaco):
@@ -491,16 +493,6 @@ def test_get_chained_empty_region_and_bad_how(spark):
     assert jx.get_chained(probes, empty, how="inner").count() == 0
     with pytest.raises(ValueError, match="how must be"):
         jx.get_chained(probes, empty, how="full")
-
-
-def test_build_region_local_null_cells(spark):
-    """NULL cells must be dropped like the distributed quarantine path —
-    and must NOT decay the long column to float64 (which would corrupt
-    every >2^53 cell bit pattern)."""
-    good = int(0x85283473FFFFFFF)
-    df = spark.createDataFrame([(good, 1), (None, 2)], "cell: long, v: long")
-    out = bx.build_region_local(df, value_col="v", compactor="none").collect()
-    assert len(out) == 1 and out[0]["cell"] == good and out[0]["v"] == 1
 
 
 def _children_of_at(cell: int, res: int) -> list[int]:

@@ -202,33 +202,106 @@ def test_knn_pruned_vs_exact(spark):
     assert pruned == exact  # everything shares the res-1 coarse cell here
 
 
-def test_polyfill_hier_equals_flat(spark):
-    """Coarse-to-fine refinement must produce exactly the flat
-    centroid-containment enumeration."""
-    from hexspark.geo import polyfill_hier
+def _flat_polyfill(poly, res, holes=()):
+    """The flat ContainsCentroid enumeration: every lattice centre in
+    the bbox, PIP-filtered and encoded, minus each hole's own fill."""
+    from hexspark.geo import polyfill_grid
 
-    cases = [
-        ([(25.0, -100.0), (40.0, -95.0), (38.0, -80.0), (28.0, -78.0), (22.0, -90.0)], 4),
-        ([(10.0, 10.0), (20.0, 10.0), (20.0, 25.0), (10.0, 25.0)], 4),  # rectangle
-        ([(-35.0, 120.0), (-18.0, 125.0), (-15.0, 140.0), (-30.0, 150.0), (-38.0, 135.0)], 5),
+    px, py, lat0, lon0, nx, ny = polyfill_grid(poly, res)
+    ii = np.arange(nx * ny, dtype=np.int64)
+    lat = lat0 + (ii // nx + 0.5) * py
+    lon = lon0 + (ii % nx + 0.5) * px
+    keep = point_in_polygon_np(lat, lon, poly)
+    cells = np.unique(grid_encode_np(lat[keep], lon[keep], res))
+    for hole in holes:
+        cells = np.setdiff1d(cells, _flat_polyfill(hole, res), assume_unique=True)
+    return cells
+
+
+_RECT = [(10.0, 10.0), (20.0, 10.0), (20.0, 25.0), (10.0, 25.0)]
+_COUNTRY = [(30.0, -10.0), (45.0, -5.0), (44.0, 15.0), (32.0, 12.0)]
+_DONUT = [(10.0, 20.0), (10.0, 30.0), (20.0, 30.0), (20.0, 20.0)]
+_DONUT_HOLE = [(13.0, 23.0), (13.0, 27.0), (17.0, 27.0), (17.0, 23.0)]
+_SPECK = [(10.0, 20.0), (10.0, 20.01), (10.01, 20.0)]
+
+
+def _polyfill_cases():
+    """(label, exterior, res, holes): the inline regions at res 2-6,
+    shapes at the lattice's edges (antimeridian, south pole), fine-res
+    specks, a donut, a whole-continent res-0 fill and a 0-cell fill."""
+    from hexspark.ops import REGIONS
+
+    cases = [(n, p, r, ()) for n, p in REGIONS.items() for r in range(2, 7)]
+    cases += [
+        ("rect", _RECT, 4, ()), ("rect", _RECT, 6, ()),
+        ("country", _COUNTRY, 5, ()), ("country", _COUNTRY, 7, ()),
+        ("lon170-180", [(0.0, 170.0), (10.0, 170.0), (10.0, 180.0), (0.0, 180.0)], 5, ()),
+        ("south-pole", [(-89.0, -180.0), (-80.0, -170.0), (-85.0, -160.0)], 5, ()),
+        ("speck", _SPECK, 11, ()), ("speck", _SPECK, 12, ()),
+        ("donut", _DONUT, 4, (_DONUT_HOLE,)), ("donut", _DONUT, 6, (_DONUT_HOLE,)),
+        ("continent", [(-60.0, -150.0), (60.0, -150.0), (60.0, 150.0), (-60.0, 150.0)], 0, ()),
+        ("tiny", [(10.0, 20.0), (10.0, 20.001), (10.001, 20.0)], 15, ()),
+        ("speck-empty", _SPECK, 3, ()),
     ]
-    for poly, res in cases:
-        flat = {r["cell"] for r in polyfill(spark, poly, res, flat_budget=10**9).collect()}
-        hier = {
-            r["cell"]
-            for r in polyfill_hier(spark, poly, res, coarse_budget=256).collect()
-        }
-        assert hier == flat, (poly[0], res, len(hier), len(flat))
+    return cases
+
+
+def test_polyfill_np_matches_flat_enumeration():
+    """The coarse-to-fine numpy fill equals the flat enumeration
+    cell-for-cell, sorted, every cell at ``res``."""
+    from hexspark.geo import polyfill_np
+
+    nonempty = 0
+    for label, poly, res, holes in _polyfill_cases():
+        got = polyfill_np(poly, res, holes=holes)
+        want = _flat_polyfill(poly, res, holes)
+        assert np.array_equal(got, want), (label, res, len(got), len(want))
+        assert (cnp.res(got) == res).all(), (label, res)
+        nonempty += len(want) > 0
+    assert nonempty == len(_polyfill_cases()) - 1  # only the speck at res 3 is empty
+
+
+def test_polyfill_matches_flat_enumeration(spark):
+    """The Spark polyfill (driver cover, distributed expansion) equals
+    the flat enumeration cell-for-cell: no duplicate rows, every cell
+    at ``res``, and one nullable long ``cell`` column."""
+    for label, poly, res, holes in _polyfill_cases():
+        df = polyfill(spark, poly, res, holes=holes)
+        assert [(f.name, f.dataType, f.nullable) for f in df.schema] == [
+            ("cell", T.LongType(), True)
+        ]
+        got = df.toArrow().column("cell").to_numpy()
+        assert len(np.unique(got)) == len(got), (label, res)
+        assert (cnp.res(got) == res).all(), (label, res)
+        want = _flat_polyfill(poly, res, holes)
+        assert np.array_equal(np.sort(got), want), (label, res, len(got), len(want))
+
+
+def test_polyfill_builds_without_spark_jobs(spark):
+    """Building a country-scale res-7 polyfill launches no Spark job:
+    the driver computes the cover, and the plan starts from its
+    Arrow-built LocalTableScan."""
+    sc = spark.sparkContext
+    group = "polyfill-build"
+    sc.setJobGroup(group, "polyfill build")
+    try:
+        df = polyfill(spark, _COUNTRY, 7)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert "Range" not in plan, plan
 
 
 def test_polyfill_fine_res_bounded(spark):
-    """A res-8 polyfill of a country-scale polygon must work through
-    the hierarchical path (the flat bbox would enumerate ~10^7
-    candidates above the auto-dispatch budget) with interior points
-    covered and exterior points absent."""
+    """A res-8 polyfill of a country-scale polygon (the flat bbox would
+    enumerate ~10^7 centres; the cover is boundary-scale) covers
+    interior points and leaves exterior points out."""
     poly = [(30.0, -10.0), (45.0, -5.0), (44.0, 15.0), (32.0, 12.0)]
     res = 8
-    out = polyfill(spark, poly, res).cache()  # auto-dispatches to hier
+    out = polyfill(spark, poly, res).cache()
     n = out.count()
     assert n > 30000
     cells = np.array([r["cell"] for r in out.collect()], dtype=np.int64)
@@ -270,7 +343,7 @@ def test_polyfill_covers_polygon(spark):
 
 def test_cachepool_generations(spark):
     """CachePool keeps current+previous generation and retires older
-    ones (the bounded-leak contract behind polyfill/knn/LSH persists)."""
+    ones (the bounded-leak contract behind knn/LSH persists)."""
     from hexspark.cachepool import CachePool
 
     pool = CachePool()
@@ -532,7 +605,7 @@ def test_regions_from_geojson(spark, tmp_path):
 
     import pytest as _pytest
 
-    from hexspark.build import build_region_local
+    from hexspark.build import build_region
     from hexspark.geo import polyfill
     from hexspark.ops import REGIONS, regions_from_geojson
 
@@ -569,7 +642,7 @@ def test_regions_from_geojson(spark, tmp_path):
         polyfill(spark, REGIONS[n], 4).withColumn("region", F.lit(n))
         for n in ("alpha", "beta")
     ]
-    want = build_region_local(
+    want = build_region(
         parts[0].unionByName(parts[1]), value_col="region", compactor="eq"
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
@@ -667,6 +740,24 @@ def test_regions_from_geojson_with_holes(spark):
     assert {r["region"] for r in got} == {"donut"}
 
 
+def test_regions_from_geojson_rejects_degenerate_rings(spark):
+    """A ring with fewer than 3 vertices once its closing vertex is
+    dropped — exterior or hole, empty included — raises a ValueError
+    naming the feature, instead of an anonymous ``min()`` error or a
+    region that silently fills 0 cells."""
+    from hexspark.ops import regions_from_geojson
+
+    ext = [[20.0, 10.0], [30.0, 10.0], [30.0, 20.0], [20.0, 20.0], [20.0, 10.0]]
+    two = [[23.0, 13.0], [27.0, 17.0], [23.0, 13.0]]
+    for rings in ([[]], [two], [ext, two], [ext, []]):
+        gj = {"type": "FeatureCollection", "features": [{
+            "type": "Feature", "properties": {"name": "sliver"},
+            "geometry": {"type": "Polygon", "coordinates": rings},
+        }]}
+        with pytest.raises(ValueError, match="feature 'sliver'.*fewer than 3"):
+            regions_from_geojson(spark, gj, res=4)
+
+
 def test_regions_geojson_roundtrip(spark, tmp_path):
     """Export -> load at the same res reproduces the compacted region
     map cell-for-cell (each exported rectangle polyfills back to
@@ -757,44 +848,6 @@ def test_region_map_builds_without_spark_jobs(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-
-
-@pytest.mark.parametrize("spilled", [("beta",), ("alpha", "beta", "gamma")])
-@pytest.mark.parametrize("compact", [True, False])
-def test_region_map_polyfill_np_fallback(spark, monkeypatch, spilled, compact):
-    """A polygon past polyfill_np's flat_budget takes the distributed
-    polyfill; the map still equals the distributed reference."""
-    from hexspark import ops
-
-    spill = [ops.REGIONS[n] for n in spilled]
-    real = ops.polyfill_np
-
-    def budgeted(polygon, res, **kw):
-        if polygon in spill:
-            raise ValueError("polyfill_np: over flat_budget")
-        return real(polygon, res, **kw)
-
-    monkeypatch.setattr(ops, "polyfill_np", budgeted)
-    _assert_same_map(spark, ops.region_map(spark, res=4, compact=compact), 4, compact)
-
-
-def test_polyfill_np_matches_distributed(spark):
-    """Driver-side numpy polyfill == distributed polyfill cell-for-cell
-    on all three inline regions at two resolutions; budget raise."""
-    import pytest as _pytest
-
-    from hexspark.geo import polyfill, polyfill_np
-    from hexspark.ops import REGIONS
-
-    for name, poly in REGIONS.items():
-        for res in (2, 4):
-            want = sorted(
-                r["cell"] for r in polyfill(spark, poly, res).collect()
-            )
-            got = sorted(int(c) for c in polyfill_np(poly, res))
-            assert got == want, (name, res)
-    with _pytest.raises(ValueError, match="flat_budget"):
-        polyfill_np(REGIONS["alpha"], 12, flat_budget=10)
 
 
 def test_trace_cells_planted(spark):
